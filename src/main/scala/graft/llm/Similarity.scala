@@ -8,6 +8,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** One MMR selection round: the row type of `sim_mmr_rerank`'s greedy
+  * UDF. Public and top-level because Spark's generated encoder code calls
+  * its accessors, which a class private to an object does not expose. */
+final case class MmrPick(sel_round: Long, vec_id: Long, mmr: Option[Double])
+
 /** Similarity search over embeddings (SURVEY.md §2.11 L3-L4 + north-star
   * ANN extension).
   *
@@ -251,7 +256,6 @@ object Similarity extends QueryModule {
     * (NaN greatest, −0.0 = 0.0), outputs rounded by the portable
     * floor(x·1e6 + 0.5)/1e6 — term-for-term the expressions the loop
     * evaluated, so results are bit-identical. */
-  private case class MmrPick(sel_round: Long, vec_id: Long, mmr: Option[Double])
   private lazy val mmrGreedyUdf =
     udf((cs: Seq[Seq[Double]], ps: Seq[Seq[Double]], k: Int) => {
       // portable round, the Column pround's scalar twin (floor → BIGINT)

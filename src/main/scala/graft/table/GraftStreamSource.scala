@@ -31,14 +31,20 @@ object GraftOffset {
   * the absolute path, the REQUIRED projection (as schema JSON — compact,
   * version-stable), and the file's Hive partition values (absent from the
   * data pages; re-injected as constants, exactly what a batch scan's
-  * partition-value columns are). */
+  * partition-value columns are), plus the planner's reader choice for the
+  * whole micro-batch (`columnarEligible`). */
 final case class GraftFilePartition(absPath: String, requiredJson: String,
                                     partition: Map[String, String],
                                     dvAbsPath: Option[String] = None,
                                     changeType: Option[String] = None,
                                     emitNewDvAbsPath: Option[String] = None,
                                     columnarEligible: Boolean = false)
-    extends InputPartition
+    extends InputPartition {
+  /** Is column `name` decoded from the file? Partition values and the
+    * change-feed tag are constants instead. */
+  def fromFile(name: String): Boolean =
+    !partition.contains(name) && !(changeType.isDefined && name == "_change_type")
+}
 
 /** STREAMING SOURCE over the versioned table (round-12 extension — the
   * consumer half of the table/streaming integration, whose producer half
@@ -69,13 +75,24 @@ final case class GraftFilePartition(absPath: String, requiredJson: String,
   * of the same name): the stream survives mid-stream maintenance and
   * delivers ONLY genuinely appended files, never rewritten base rows.
   *
-  * Executors read the parquet files through the public parquet-hadoop
-  * Group API (flat primitive schemas — exactly what the table format
-  * writes), projecting only the required columns and re-injecting
-  * partition values as constants. The row-materializing reader is the
-  * honest cost of a self-contained source; the batch path keeps Spark's
-  * vectorized scan (it reads through the V1 relation), and a streaming
-  * micro-batch is delta-sized by construction.
+  * Executors read each micro-batch through ONE of two readers, chosen by
+  * the planner ([[GraftMicroBatchStream.columnarEligible]]) and stamped
+  * uniformly on the batch's partitions, because Spark refuses a scan that
+  * mixes row and columnar partitions:
+  *
+  *  - [[GraftColumnarFileReader]] hands Spark's own vectorized parquet
+  *    batches straight to ColumnarToRow, with no per-row work on the
+  *    source side. A batch is eligible when every file carries no
+  *    deletion vector and no delta-emit vector, stores at least one
+  *    requested data column, and stores each requested column in a type
+  *    [[GraftColumnarFileReader.servable]] accepts — all read from the
+  *    footers [[GraftFooterFields]] caches;
+  *  - [[GraftGroupFileReader]] (parquet-hadoop Group records) serves
+  *    every other batch: deletion-vector masking, CDF delta-emit, and
+  *    schema-evolution shapes the columnar reader cannot serve.
+  *
+  * Neither reader falls back to the other at run time: the choice is the
+  * planner's, made before any task starts.
   */
 final class GraftMicroBatchStream(t: GraftTable, required: StructType,
                                   startingVersion: String,
@@ -167,16 +184,11 @@ final class GraftMicroBatchStream(t: GraftTable, required: StructType,
     * `skipChangeCommits` do not apply (combining them is refused at
     * option parsing). */
   private def planChangeFeed(s: Long, e: Long): Array[InputPartition] = {
-    val mapping = t.commitAt(e).columnMapping
-    // `_change_type` rides in the required schema (the reader
-    // materializes it from the partition's tag, never from the file);
-    // data fields map to their physical parquet names as usual
-    val physRequired =
-      if (mapping.isEmpty) required
-      else StructType(required.fields.map(f =>
-        f.copy(name = mapping.getOrElse(f.name, f.name))))
+    // `_change_type` rides in the required schema (the readers
+    // materialize it from the partition's tag, never from the file)
+    val physRequired = physicalRequired(e)
     val json = physRequired.json
-    val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    val parts = scala.collection.mutable.ArrayBuffer.empty[GraftFilePartition]
     var prevMap = filesAt(s).map(f => f.path -> f).toMap
     ((s + 1) to e).foreach { v =>
       val cur = t.commitAt(v)
@@ -217,7 +229,25 @@ final class GraftMicroBatchStream(t: GraftTable, required: StructType,
       }
       prevMap = curMap
     }
-    parts.toArray
+    stamp(parts.toSeq, physRequired)
+  }
+
+  /** The required projection under PHYSICAL names for column-mapped
+    * tables: the executor readers match parquet fields (and partition
+    * directory keys) by physical name. Field ORDER stays the logical
+    * order, which is what the produced rows follow. */
+  private def physicalRequired(version: Long): StructType = {
+    val mapping = t.commitAt(version).columnMapping
+    if (mapping.isEmpty) required
+    else StructType(required.fields.map(f =>
+      f.copy(name = mapping.getOrElse(f.name, f.name))))
+  }
+
+  /** Stamps the batch's one reader choice on every partition. */
+  private def stamp(parts: Seq[GraftFilePartition], physRequired: StructType)
+      : Array[InputPartition] = {
+    val eligible = GraftMicroBatchStream.columnarEligible(parts, physRequired)
+    parts.map(p => p.copy(columnarEligible = eligible): InputPartition).toArray
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -250,222 +280,71 @@ final class GraftMicroBatchStream(t: GraftTable, required: StructType,
     // documented Delta option of the same name. New files may still
     // carry a vector (a restore can re-add a DV'd entry): the reader
     // subtracts it position-by-position.
-    // Column-mapped tables: the executor reader matches parquet fields
-    // (and partition directory keys) by PHYSICAL name, so serialize the
-    // required projection under physical names — field ORDER stays the
-    // logical order, which is what the produced InternalRows follow.
-    val mapping = t.commitAt(e).columnMapping
-    val physRequired =
-      if (mapping.isEmpty) required
-      else org.apache.spark.sql.types.StructType(required.fields.map(f =>
-        f.copy(name = mapping.getOrElse(f.name, f.name))))
-    // Columnar eligibility is decided PER BATCH and stamped uniformly on
-    // every partition (Spark refuses scans that mix row-based and columnar
-    // partitions): a batch hands whole decoded batches to ColumnarToRow —
-    // zero per-row materialization — exactly when no file needs the
-    // row-at-a-time deletion-vector subtract and every file has at least
-    // one file-stored column to drive the reader.
-    val newFiles = toFiles.filter(f => !fromPaths.contains(f.path))
-    val dataCols = physRequired.fields.map(_.name).toSet - "_change_type"
-    val eligible = newFiles.nonEmpty && newFiles.forall(f =>
-      f.dv.isEmpty && (dataCols -- f.partition.keySet).nonEmpty)
-    newFiles
-      .map(f => GraftFilePartition(abs(f.path), physRequired.json,
-        f.partition, f.dv.map(abs),
-        columnarEligible = eligible): InputPartition)
-      .toArray
+    val physRequired = physicalRequired(e)
+    val json = physRequired.json
+    stamp(toFiles.filter(f => !fromPaths.contains(f.path)).map(f =>
+      GraftFilePartition(abs(f.path), json, f.partition, f.dv.map(abs))),
+      physRequired)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // operational escape hatch: spark.graft.stream.vectorizedReader=false
-    // pins the row-based Group reader (also the automatic per-file
-    // fallback for shapes the vectorized path cannot serve)
-    new GraftStreamReaderFactory(
-      org.apache.spark.sql.SparkSession.active.sessionState.conf
-        .getConfString("spark.graft.stream.vectorizedReader", "true").toBoolean)
+    new GraftStreamReaderFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-/** Executor-side reader factory (round-15 verdict task 5): the VECTORIZED
-  * parquet reader first — Spark's own `VectorizedParquetRecordReader`,
-  * the decoder the batch path uses, driven per file with the projection
-  * clipped to the file's schema; rows come off the columnar batch, so a
-  * wide-column backlog replay decodes at batch-scan speed instead of the
-  * Group API's per-field materialization. Partition values, the CDF tag
-  * column, deletion-vector masking and delta-emit all behave exactly as
-  * the row-based reader. Any file/shape the vectorized path cannot serve
-  * (it throws at INITIALIZATION, never mid-stream: position bookkeeping
-  * starts after init succeeds) falls back to [[GraftGroupReaderFactory]]
-  * — correctness is never gated on the fast path. */
-final class GraftStreamReaderFactory(vectorized: Boolean = true)
-    extends PartitionReaderFactory {
+object GraftMicroBatchStream {
+  /** May this micro-batch be read as columnar batches? True when every
+    * file
+    *
+    *  - carries no deletion vector and no delta-emit vector (masking is
+    *    row-at-a-time, so only the Group reader does it);
+    *  - stores at least one requested data column (the columnar reader
+    *    needs a decoded column to drive it; partition values and the CDF
+    *    tag are constants);
+    *  - stores every requested column it has in a type the columnar reader
+    *    can serve ([[GraftColumnarFileReader.servable]]).
+    *
+    * Footers come from [[GraftFooterFields]], so a file's footer is parsed
+    * once per JVM and the executor-side reader reuses it. `required` is
+    * the PHYSICAL projection the partitions carry. */
+  def columnarEligible(parts: Seq[GraftFilePartition],
+                       required: StructType): Boolean =
+    parts.forall(p => p.dvAbsPath.isEmpty && p.emitNewDvAbsPath.isEmpty) &&
+      parts.forall { p =>
+        val stored = GraftFooterFields.footer(p.absPath).schema
+        val wanted = required.fields.filter(f =>
+          p.fromFile(f.name) && stored.fieldNames.contains(f.name))
+        wanted.nonEmpty && wanted.forall(f =>
+          GraftColumnarFileReader.servable(f.dataType, stored(f.name).dataType))
+      }
+}
 
-  /** True COLUMNAR hand-off (round-16): when the planner stamped the whole
-    * micro-batch eligible (no deletion vectors, a file-stored projection),
-    * decoded parquet batches flow straight into ColumnarToRow codegen with
-    * ZERO per-row materialization on the source side — the shape Spark's
-    * own file scan uses. The flag is uniform per batch by construction
-    * (Spark refuses mixed row/columnar partitions in one scan). */
+/** Executor-side reader factory: columnar batches for partitions the
+  * planner stamped eligible ([[GraftMicroBatchStream.columnarEligible]]),
+  * Group-API rows for every other partition. The stamp is uniform per
+  * micro-batch, so one scan never mixes the two. */
+final class GraftStreamReaderFactory extends PartitionReaderFactory {
   override def supportColumnarReads(p: InputPartition): Boolean =
-    vectorized && p.asInstanceOf[GraftFilePartition].columnarEligible
+    p.asInstanceOf[GraftFilePartition].columnarEligible
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarFileReader(p.asInstanceOf[GraftFilePartition])
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[GraftFilePartition]
-    if (!vectorized) return new GraftGroupReaderFactory().createReader(p)
-    try new GraftVectorizedFileReader(fp)
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        new GraftGroupReaderFactory().createReader(p)
-    }
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new GraftGroupFileReader(p.asInstanceOf[GraftFilePartition])
 }
 
-/** One file through Spark's vectorized parquet decoder, surfaced as the
-  * required projection's InternalRows. The projection is clipped to the
-  * columns the FILE stores (schema evolution: missing columns are null;
-  * partition/tag columns are injected as constants); numeric widening
-  * (int→long, int/float→double — ALTER COLUMN TYPE) adapts per column at
-  * setup. Rebase modes are CORRECTED: every graft data file is written by
-  * this engine on Spark 4, proleptic calendar. */
-private[table] final class GraftVectorizedFileReader(fp: GraftFilePartition)
-    extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
-
-  private val required = DataType.fromJson(fp.requiredJson).asInstanceOf[StructType]
-
-  private val wanted: Set[String] = required.fields.map(_.name).toSet --
-    fp.partition.keySet - "_change_type"
-  require(GraftFooterFields.of(fp.absPath).exists(wanted.contains),
-    "no file-stored columns requested — use the row reader")
-  // projection clipped to the columns the FILE stores, in file order
-  private val (reader, cols) = GraftVectorizedInit.open(fp.absPath, wanted)
-
-  // batch column types, positionally aligned with `cols`
-  private val batchTypes: Seq[DataType] = {
-    val cb = reader.resultBatch()
-    (0 until cb.numCols()).map(i => cb.column(i).dataType())
-  }
-  require(batchTypes.length == cols.length,
-    s"projection mismatch: ${cols.length} columns requested, ${batchTypes.length} decoded")
-
-  /** Per-required-field extractor over the (reused) batch row. */
-  private val extractors: Array[InternalRow => Any] =
-    required.fields.map { f =>
-      if (fp.changeType.isDefined && f.name == "_change_type") {
-        val tag = UTF8String.fromString(fp.changeType.get)
-        (_: InternalRow) => tag
-      } else fp.partition.get(f.name) match {
-        case Some(v) =>
-          val const = GraftGroupReaderFactory.partitionValue(f, v)
-          (_: InternalRow) => const
-        case None =>
-          val i = cols.indexOf(f.name)
-          if (i < 0) (_: InternalRow) => null
-          else {
-            val bt = batchTypes(i)
-            (f.dataType, bt) match {
-              case (a, b) if a == b => a match {
-                case LongType => r => if (r.isNullAt(i)) null else r.getLong(i)
-                case IntegerType => r => if (r.isNullAt(i)) null else r.getInt(i)
-                case DoubleType => r => if (r.isNullAt(i)) null else r.getDouble(i)
-                case FloatType => r => if (r.isNullAt(i)) null else r.getFloat(i)
-                case BooleanType => r => if (r.isNullAt(i)) null else r.getBoolean(i)
-                case StringType =>
-                  r => if (r.isNullAt(i)) null else r.getUTF8String(i).clone()
-                case DateType => r => if (r.isNullAt(i)) null else r.getInt(i)
-                case ArrayType(_, _) =>
-                  r => if (r.isNullAt(i)) null else r.getArray(i).copy()
-                case other => throw new UnsupportedOperationException(
-                  s"graft vectorized stream reader: column type $other for ${f.name}")
-              }
-              // TIMESTAMP flavors both surface as INT64 micros
-              case (TimestampType | TimestampNTZType,
-                    TimestampType | TimestampNTZType) =>
-                r => if (r.isNullAt(i)) null else r.getLong(i)
-              // type widening (ALTER COLUMN TYPE): old narrow files
-              case (LongType, IntegerType) =>
-                r => if (r.isNullAt(i)) null else r.getInt(i).toLong
-              case (DoubleType, IntegerType) =>
-                r => if (r.isNullAt(i)) null else r.getInt(i).toDouble
-              case (DoubleType, FloatType) =>
-                r => if (r.isNullAt(i)) null else r.getFloat(i).toDouble
-              case (a, b) => throw new UnsupportedOperationException(
-                s"graft vectorized stream reader: cannot serve ${f.name}: " +
-                  s"$b as $a")
-            }
-          }
-      }
-    }
-
-  // deletion-vector masking / delta-emit — same contract as the row reader
-  private val dv: Array[Long] =
-    fp.dvAbsPath.map(GraftTable.readDv).getOrElse(Array.emptyLongArray)
-  private var dvCursor = 0
-  private var rowIdx = -1L
-  private val emitNew: Array[Long] =
-    fp.emitNewDvAbsPath.map(GraftTable.readDv).orNull
-  private var emitCursor = 0
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (!reader.nextKeyValue()) return false
-      current = reader.getCurrentValue.asInstanceOf[InternalRow]
-      rowIdx += 1
-      val inOld =
-        if (dvCursor < dv.length && dv(dvCursor) == rowIdx) {
-          dvCursor += 1; true
-        } else false
-      if (emitNew == null) {
-        if (!inOld) return true
-      } else {
-        while (emitCursor < emitNew.length && emitNew(emitCursor) < rowIdx)
-          emitCursor += 1
-        val inNew = emitCursor < emitNew.length && emitNew(emitCursor) == rowIdx
-        if (inNew && !inOld) return true
-      }
-    }
-    false // unreachable
-  }
-
-  // One reusable output row (standard PartitionReader practice — the scan
-  // exec copies each row before buffering): the previous
-  // `InternalRow.fromSeq(extractors.toIndexedSeq.map(_(r)))` allocated a
-  // wrapper + a mapped Seq + a fresh row PER ROW, which benchmarked the
-  // "vectorized" reader 2x SLOWER than the Group-API fallback on the 1M-row
-  // StreamBench drain (0.76 s vs 0.39 s).
-  private val outValues = new Array[Any](required.fields.length)
-  private val outRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(outValues)
-
-  override def get(): InternalRow = {
-    val r = current
-    var i = 0
-    while (i < extractors.length) {
-      outValues(i) = extractors(i)(r)
-      i += 1
-    }
-    outRow
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-/** Per-JVM cache of parquet footer metadata (field order, schema, length)
-  * by absolute path — table data files are immutable once committed (new
-  * content = new path), so entries never go stale; the cache removes one
-  * redundant footer open+parse per (file, task) across micro-batches and
-  * readers (guide §6 metadata-read cost). Crude size bound against
-  * unbounded long-service growth. */
+/** Per-JVM cache of parquet footer metadata (the file schema as Spark
+  * types, and the file length) by absolute path — table data files are
+  * immutable once committed (new content = new path), so entries never
+  * go stale; the planner's eligibility check and the columnar reader share
+  * one footer open+parse per file (guide §6 metadata-read cost). Crude
+  * size bound against unbounded long-service growth. */
 private[table] object GraftFooterFields {
-  final case class Footer(fields: Seq[String], messageType: String,
-                          length: Long)
+  final case class Footer(schema: StructType, length: Long)
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, Footer]()
   def footer(absPath: String): Footer = {
@@ -474,71 +353,30 @@ private[table] object GraftFooterFields {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(new Path(p), new Configuration())
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val md = r.getFooter.getFileMetaData.getSchema
-        Footer((0 until md.getFieldCount).map(i => md.getFieldName(i)),
-          md.toString, in.getLength)
-      } finally r.close()
+      try Footer(new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(readConf())
+          .convert(r.getFooter.getFileMetaData.getSchema), in.getLength)
+      finally r.close()
     })
   }
-  def of(absPath: String): Seq[String] = footer(absPath).fields
-}
 
-/** Builds and initializes Spark's vectorized parquet reader over one graft
-  * data file with the projection clipped to `wanted` ∩ file columns, under
-  * a PROPER read configuration. The previously used test-only
-  * `initialize(path, columns)` overload hardcodes
-  * `int96AsTimestamp=false`, so every file with a Spark-default INT96
-  * timestamp column threw at init and the "vectorized" reader silently
-  * fell back to the Group-API row path — this goes through the production
-  * `InputSplit`/`TaskAttemptContext` route instead, with the requested
-  * schema derived from the FILE's own footer (so ALTER-COLUMN-TYPE files
-  * surface their native narrow vectors, widened downstream). */
-private[table] object GraftVectorizedInit {
-  import org.apache.spark.sql.execution.datasources.parquet.{
-    ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
-
-  /** (initialized reader, projected column names in file order). The
-    * caller owns the reader (close it). */
-  def open(absPath: String, wanted: Set[String])
-      : (VectorizedParquetRecordReader, Seq[String]) = {
-    val ft = GraftFooterFields.footer(absPath)
-    val cols = ft.fields.filter(wanted.contains)
+  /** The parquet read configuration behind both the footer's Spark schema
+    * and the columnar reader: INT96 reads as timestamp, binary stays
+    * binary, timestamps without UTC adjustment read as TIMESTAMP_NTZ. */
+  def readConf(): Configuration = {
     val conf = new Configuration()
     conf.set("spark.sql.parquet.binaryAsString", "false")
     conf.set("spark.sql.parquet.int96AsTimestamp", "true")
     conf.set("spark.sql.caseSensitive", "false")
     conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val msg = org.apache.parquet.schema.MessageTypeParser
-      .parseMessageType(ft.messageType)
-    val fileCatalyst = new ParquetToSparkSchemaConverter(conf).convert(msg)
-    val requested = StructType(
-      fileCatalyst.fields.filter(f => cols.contains(f.name)))
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
-    conf.set("parquet.read.support.class",
-      classOf[ParquetReadSupport].getName)
-    // the base reader casts to the old-API split class internally
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new Path(absPath), 0, ft.length, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    val reader = new VectorizedParquetRecordReader(
-      java.time.ZoneId.of("UTC"), "CORRECTED", "UTC", "CORRECTED", "UTC",
-      /* useOffHeap = */ false, /* capacity = */ 4096)
-    try {
-      reader.initialize(split, ctx)
-      reader.initBatch(new StructType(), InternalRow.empty)
-    } catch {
-      case t: Throwable => reader.close(); throw t
-    }
-    (reader, cols)
+    conf
   }
 }
 
 /** Delegating ColumnVector that serves an ALTER-COLUMN-TYPE widened view
   * of an un-widened file vector (int→long, int/float→double) — the
-  * columnar twin of the row reader's widening extractors. Only the
+  * columnar twin of the Group reader's widening. Only the
   * target-type getter and the null accessors are reachable. */
 private[table] final class GraftWideningVector(
     child: org.apache.spark.sql.vectorized.ColumnVector,
@@ -572,27 +410,60 @@ private[table] final class GraftWideningVector(
 }
 
 /** One file surfaced as COLUMNAR BATCHES (the planner-stamped eligible
-  * case: no deletion vector, no delta-emit, ≥1 file-stored column):
-  * Spark's vectorized parquet decoder in batch-return mode, with the
-  * output batch assembled from the decoded vectors REORDERED to the
-  * required projection — partition values and the CDF tag as constant
-  * vectors, schema-evolution-missing columns as null constants, ALTER'd
-  * types through [[GraftWideningVector]]. No per-row work at all on the
-  * source side; ColumnarToRow downstream is whole-stage codegen. */
+  * case, see [[GraftMicroBatchStream.columnarEligible]]): Spark's
+  * vectorized parquet decoder in batch-return mode over the file-stored
+  * requested columns, with the output batch assembled from the decoded
+  * vectors REORDERED to the required projection — partition values and
+  * the CDF tag as constant vectors, schema-evolution-missing columns as
+  * null constants, ALTER'd types through [[GraftWideningVector]]. No
+  * per-row work at all on the source side; ColumnarToRow downstream is
+  * whole-stage codegen.
+  *
+  * The decoder goes through the production `InputSplit`/
+  * `TaskAttemptContext` route with the requested schema taken from the
+  * FILE's own footer, so ALTER-COLUMN-TYPE files surface their native
+  * narrow vectors. Rebase modes are CORRECTED: every graft data file is
+  * written by this engine on Spark 4, proleptic calendar. */
 private[table] final class GraftColumnarFileReader(fp: GraftFilePartition)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+  import org.apache.spark.sql.execution.datasources.parquet.{
+    ParquetReadSupport, VectorizedParquetRecordReader}
   import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val required = DataType.fromJson(fp.requiredJson).asInstanceOf[StructType]
-  private val wanted: Set[String] = required.fields.map(_.name).toSet --
-    fp.partition.keySet - "_change_type"
-  private val (reader, cols) = GraftVectorizedInit.open(fp.absPath, wanted)
-  require(cols.nonEmpty,
+  private val footer = GraftFooterFields.footer(fp.absPath)
+  // the file-stored requested columns, in FILE order (the decoded order)
+  private val requested = {
+    val fromFile = required.fieldNames.filter(fp.fromFile).toSet
+    StructType(footer.schema.fields.filter(f => fromFile(f.name)))
+  }
+  require(requested.nonEmpty,
     s"graft columnar stream reader: no file-stored columns of ${fp.absPath}" +
       " requested — planner must not mark such partitions eligible")
-  reader.enableReturningBatches()
+
+  private val reader = {
+    val conf = GraftFooterFields.readConf()
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    conf.set("parquet.read.support.class",
+      classOf[ParquetReadSupport].getName)
+    // the base reader casts to the old-API split class internally
+    val split = new org.apache.hadoop.mapred.FileSplit(
+      new Path(fp.absPath), 0, footer.length, Array.empty[String])
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val r = new VectorizedParquetRecordReader(
+      java.time.ZoneId.of("UTC"), "CORRECTED", "UTC", "CORRECTED", "UTC",
+      /* useOffHeap = */ false, /* capacity = */ 4096)
+    try {
+      r.initialize(split, ctx)
+      r.initBatch(new StructType(), InternalRow.empty)
+      r.enableReturningBatches()
+    } catch {
+      case t: Throwable => r.close(); throw t
+    }
+    r
+  }
   private val src = reader.resultBatch()
 
   private def const(f: StructField, set: ConstantColumnVector => Unit)
@@ -607,7 +478,7 @@ private[table] final class GraftColumnarFileReader(fp: GraftFilePartition)
       const(f, _.setUtf8String(UTF8String.fromString(fp.changeType.get)))
     else fp.partition.get(f.name) match {
       case Some(raw) =>
-        GraftGroupReaderFactory.partitionValue(f, raw) match {
+        GraftGroupFileReader.partitionValue(f, raw) match {
           case null => const(f, _.setNull())
           case s: UTF8String => const(f, _.setUtf8String(s))
           case l: java.lang.Long => const(f, _.setLong(l))
@@ -619,23 +490,17 @@ private[table] final class GraftColumnarFileReader(fp: GraftFilePartition)
             s"graft columnar stream reader: partition constant $other")
         }
       case None =>
-        val i = cols.indexOf(f.name)
+        val i = requested.fieldNames.indexOf(f.name)
         if (i < 0) const(f, _.setNull()) // schema evolution: missing column
         else {
           val cv = src.column(i)
-          val bt = cv.dataType()
-          (f.dataType, bt) match {
-            case (a, b) if a == b => cv
-            // TIMESTAMP flavors share the INT64-micros layout
-            case (TimestampType | TimestampNTZType,
-                  TimestampType | TimestampNTZType) => cv
-            case (LongType, IntegerType) |
-                 (DoubleType, IntegerType) |
-                 (DoubleType, FloatType) =>
-              new GraftWideningVector(cv, bt, f.dataType)
-            case (a, b) => throw new UnsupportedOperationException(
-              s"graft columnar stream reader: cannot serve ${f.name}: $b as $a")
-          }
+          val got = cv.dataType()
+          require(GraftColumnarFileReader.servable(f.dataType, got),
+            s"graft columnar stream reader: cannot serve ${f.name}: $got as " +
+              s"${f.dataType} — planner must not mark such partitions eligible")
+          if (GraftColumnarFileReader.widens(f.dataType, got))
+            new GraftWideningVector(cv, got, f.dataType)
+          else cv
         }
     }
   }
@@ -651,84 +516,105 @@ private[table] final class GraftColumnarFileReader(fp: GraftFilePartition)
   override def close(): Unit = reader.close()
 }
 
-/** Executor-side ROW-BASED reader (the fallback path): parquet Group
-  * records → InternalRow of the required projection. Primitive columns
-  * (long, int, double, float,
-  * boolean, string, timestamp[_ntz] as INT64 micros or INT96, date) plus
-  * ARRAYS of those primitives (Spark's 3-level parquet list layout — the
-  * embeddings table's `array<float>` streams) — the shapes the table
-  * format writes; anything else fails loudly. A required column missing
-  * from the file (schema evolution) or from a row (null) is null; a
-  * required column present in the file's PARTITION values materializes
-  * as a constant. */
-final class GraftGroupReaderFactory extends PartitionReaderFactory {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fp = p.asInstanceOf[GraftFilePartition]
-    val required = DataType.fromJson(fp.requiredJson).asInstanceOf[StructType]
-    new PartitionReader[InternalRow] {
-      private val reader: ParquetReader[Group] =
-        ParquetReader.builder(new GroupReadSupport(), new Path(fp.absPath))
-          .withConf(new Configuration()).build()
-      private var current: Group = _
-      // deletion vector: sorted deleted positions, consumed in lockstep
-      // with the sequential read (positions ascend, so one cursor)
-      private val dv: Array[Long] =
-        fp.dvAbsPath.map(GraftTable.readDv).getOrElse(Array.emptyLongArray)
-      private var dvCursor = 0
-      private var rowIdx = -1L
-      // change-feed DV-swap partitions: emit ONLY the positions the NEW
-      // vector masks beyond the old one (the rows this commit deleted)
-      private val emitNew: Array[Long] =
-        fp.emitNewDvAbsPath.map(GraftTable.readDv).orNull
-      private var emitCursor = 0
-
-      override def next(): Boolean = {
-        while (true) {
-          current = reader.read()
-          if (current == null) return false
-          rowIdx += 1
-          val inOld =
-            if (dvCursor < dv.length && dv(dvCursor) == rowIdx) {
-              dvCursor += 1; true
-            } else false
-          if (emitNew == null) {
-            if (!inOld) return true // normal mode: vector masks
-          } else {
-            // delta-emit mode: row qualifies iff newly masked
-            while (emitCursor < emitNew.length && emitNew(emitCursor) < rowIdx)
-              emitCursor += 1
-            val inNew = emitCursor < emitNew.length && emitNew(emitCursor) == rowIdx
-            if (inNew && !inOld) return true
-          }
-        }
-        false // unreachable
-      }
-
-      override def get(): InternalRow = {
-        val g = current
-        val schema = g.getType
-        val vals = required.fields.map { f =>
-          if (fp.changeType.isDefined && f.name == "_change_type")
-            UTF8String.fromString(fp.changeType.get)
-          else fp.partition.get(f.name) match {
-            case Some(v) => partitionValue(f, v)
-            case None =>
-              if (!schema.containsField(f.name)) null
-              else {
-                val i = schema.getFieldIndex(f.name)
-                if (g.getFieldRepetitionCount(i) == 0) null
-                else fieldValue(f, g, i)
-              }
-          }
-        }
-        InternalRow.fromSeq(vals.toIndexedSeq)
-      }
-
-      override def close(): Unit = reader.close()
-    }
+object GraftColumnarFileReader {
+  /** Can the columnar reader serve a file column stored as `got` under the
+    * required type `want`? The same type, either TIMESTAMP flavor (both
+    * INT64 micros), or one of the [[widens]] pairs. The planner's
+    * eligibility check and the reader's vector choice both ask this, so
+    * they cannot disagree. */
+  def servable(want: DataType, got: DataType): Boolean = (want, got) match {
+    case (a, b) if a == b => true
+    case (TimestampType | TimestampNTZType, TimestampType | TimestampNTZType) => true
+    case _ => widens(want, got)
   }
 
+  /** The ALTER COLUMN TYPE widenings [[GraftWideningVector]] serves. */
+  private[table] def widens(want: DataType, got: DataType): Boolean =
+    (want, got) match {
+      case (LongType, IntegerType) | (DoubleType, IntegerType) |
+           (DoubleType, FloatType) => true
+      case _ => false
+    }
+}
+
+/** Executor-side ROW-BASED reader for every batch the planner did not
+  * stamp columnar: parquet Group records → InternalRow of the required
+  * projection, with deletion-vector masking and CDF delta-emit. Primitive
+  * columns (long, int, double, float, boolean, string, timestamp[_ntz] as
+  * INT64 micros or INT96, date) plus ARRAYS of those primitives (Spark's
+  * 3-level parquet list layout — the embeddings table's `array<float>`
+  * streams), with ALTER COLUMN TYPE widening of old narrow values, array
+  * elements included — the shapes the table format writes; anything else
+  * fails loudly. A required column missing from the file (schema
+  * evolution) or from a row (null) is null; a required column present in
+  * the file's PARTITION values materializes as a constant. */
+private[table] final class GraftGroupFileReader(fp: GraftFilePartition)
+    extends PartitionReader[InternalRow] {
+  import GraftGroupFileReader.{fieldValue, partitionValue}
+
+  private val required = DataType.fromJson(fp.requiredJson).asInstanceOf[StructType]
+  private val reader: ParquetReader[Group] =
+    ParquetReader.builder(new GroupReadSupport(), new Path(fp.absPath))
+      .withConf(new Configuration()).build()
+  private var current: Group = _
+  // deletion vector: sorted deleted positions, consumed in lockstep
+  // with the sequential read (positions ascend, so one cursor)
+  private val dv: Array[Long] =
+    fp.dvAbsPath.map(GraftTable.readDv).getOrElse(Array.emptyLongArray)
+  private var dvCursor = 0
+  private var rowIdx = -1L
+  // change-feed DV-swap partitions: emit ONLY the positions the NEW
+  // vector masks beyond the old one (the rows this commit deleted)
+  private val emitNew: Array[Long] =
+    fp.emitNewDvAbsPath.map(GraftTable.readDv).orNull
+  private var emitCursor = 0
+
+  override def next(): Boolean = {
+    while (true) {
+      current = reader.read()
+      if (current == null) return false
+      rowIdx += 1
+      val inOld =
+        if (dvCursor < dv.length && dv(dvCursor) == rowIdx) {
+          dvCursor += 1; true
+        } else false
+      if (emitNew == null) {
+        if (!inOld) return true // normal mode: vector masks
+      } else {
+        // delta-emit mode: row qualifies iff newly masked
+        while (emitCursor < emitNew.length && emitNew(emitCursor) < rowIdx)
+          emitCursor += 1
+        val inNew = emitCursor < emitNew.length && emitNew(emitCursor) == rowIdx
+        if (inNew && !inOld) return true
+      }
+    }
+    false // unreachable
+  }
+
+  override def get(): InternalRow = {
+    val g = current
+    val schema = g.getType
+    val vals = required.fields.map { f =>
+      if (fp.changeType.isDefined && f.name == "_change_type")
+        UTF8String.fromString(fp.changeType.get)
+      else fp.partition.get(f.name) match {
+        case Some(v) => partitionValue(f, v)
+        case None =>
+          if (!schema.containsField(f.name)) null
+          else {
+            val i = schema.getFieldIndex(f.name)
+            if (g.getFieldRepetitionCount(i) == 0) null
+            else fieldValue(f, g, i)
+          }
+      }
+    }
+    InternalRow.fromSeq(vals.toIndexedSeq)
+  }
+
+  override def close(): Unit = reader.close()
+}
+
+object GraftGroupFileReader {
   private def fieldValue(f: StructField, g: Group, i: Int): Any = f.dataType match {
     case ArrayType(et, _) =>
       // Spark's 3-level list layout: optional group f (LIST) {
@@ -792,14 +678,9 @@ final class GraftGroupReaderFactory extends PartitionReaderFactory {
         s"graft stream reader: unsupported column type $other for $name")
     }
 
-  private def partitionValue(f: StructField, v: String): Any =
-    GraftGroupReaderFactory.partitionValue(f, v)
-}
-
-object GraftGroupReaderFactory {
   /** Hive partition value string → catalyst value of the field's type.
     * The null-partition directory marker reconstructs as NULL, matching
-    * the batch path. Shared by the vectorized and Group readers. */
+    * the batch path. Shared by the columnar and Group readers. */
   private[table] def partitionValue(f: StructField, v: String): Any =
     if (v == GraftTable.HiveNullPartition) null
     else f.dataType match {

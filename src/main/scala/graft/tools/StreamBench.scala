@@ -135,9 +135,10 @@ object StreamBench {
     }
     // graft streaming SOURCE throughput: stream a versioned table out by
     // version-offsets (8 appended versions = 8 micro-batches) through the
-    // VECTORIZED per-file reader (round-15; Group-API fallback for shapes
-    // it cannot serve). The `batch_scan` probe below reads the SAME table
-    // through the batch path — backlog-replay parity is the ratio.
+    // columnar per-file reader (every batch is append-only, so the planner
+    // stamps each one columnar). The `batch_scan` probe below reads the
+    // SAME table through the batch path — backlog-replay parity is the
+    // ratio.
     if (probes.contains("table_source")) {
       val root = s"$work/srctbl"
       val parts = spark.read.parquet(stageDir)
@@ -145,9 +146,7 @@ object StreamBench {
         parts.where("spark_partition_id() % 8 = 0"))
       (1 until 8).foreach(i =>
         t.append(parts.where(s"spark_partition_id() % 8 = $i")))
-      def drain(tag: String, vectorized: Boolean): Unit = {
-        spark.conf.set("spark.graft.stream.vectorizedReader",
-          vectorized.toString)
+      def drain(tag: String): Unit = {
         val t0 = System.nanoTime()
         val q = spark.readStream.format("graft").load(root)
           .writeStream.format("noop")
@@ -162,11 +161,8 @@ object StreamBench {
       // untimed warm drain: the FIRST streaming query in a session absorbs
       // one-time planner/codegen/offset-log init, which biased whichever
       // tagged drain ran first (Bench.scala's warmup lesson applied here)
-      drain("warmup_untimed", vectorized = true)
-      drain("vectorized", vectorized = true)
-      drain("rowbased", vectorized = false)
-      drain("vectorized2", vectorized = true)
-      spark.conf.unset("spark.graft.stream.vectorizedReader")
+      drain("warmup_untimed")
+      drain("columnar")
       // batch-path control over the SAME table: the parity denominator —
       // decodes every column (sum/min force the reads) without per-row
       // string building, min-of-3 against co-tenant noise

@@ -147,6 +147,20 @@ class RetrievalEvalSpec extends SparkSpec {
     rows.drop(1).foreach(r => assert(r.getAs[Double]("mmr") <= m1 + 1e-9))
   }
 
+  test("sim_mmr_rerank: all generated code compiles, so a run with no " +
+      "interpreted fallback returns the default run's rows") {
+    val default = run("sim_mmr_rerank").toSeq
+    // codegen.fallback covers whole-stage code; factoryMode=CODEGEN_ONLY
+    // covers the expression projections (the UDF result's encoder)
+    val strict = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    strict.foreach { case (k, v) => spark.conf.set(k, v) }
+    val got =
+      try run("sim_mmr_rerank").toSeq
+      finally strict.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(got.nonEmpty && got === default)
+  }
+
   test("mine_seq_pattern: journey lengths sum to the event count, counts bounded") {
     val rows = run("mine_seq_pattern")
     val total = rows.map(_.getAs[Long]("seq_len")).sum

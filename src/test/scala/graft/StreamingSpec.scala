@@ -455,18 +455,25 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.size === 5000)
     assert(streamed === batch,
       "columnar-streamed rows must equal the batch read exactly")
-    // eligibility gates on the partition flag the planner stamps
-    val fac = new graft.table.GraftStreamReaderFactory(vectorized = true)
-    val clean = graft.table.GraftFilePartition("/x", "{}", Map.empty,
-      columnarEligible = true)
-    val dvd = graft.table.GraftFilePartition("/x", "{}", Map.empty,
-      dvAbsPath = Some("/dv"), columnarEligible = false)
-    assert(fac.supportColumnarReads(clean))
-    assert(!fac.supportColumnarReads(dvd),
-      "deletion-vector partitions must stay on the row path")
-    assert(!new graft.table.GraftStreamReaderFactory(vectorized = false)
-      .supportColumnarReads(clean),
-      "the vectorizedReader=false escape hatch must disable columnar too")
+    // the planner's per-batch choice, from the cached file footers
+    import org.apache.spark.sql.types._
+    import graft.table.{GraftFilePartition, GraftMicroBatchStream}
+    val required = df.schema
+    val parts = t.commitAt(t.latestVersion).files.map(f =>
+      GraftFilePartition(s"$root/${f.path}", required.json, Map.empty))
+    assert(parts.size >= 2, "both appends' files")
+    assert(GraftMicroBatchStream.columnarEligible(parts, required),
+      "a clean append batch must read columnar")
+    assert(!GraftMicroBatchStream.columnarEligible(
+      parts.head.copy(dvAbsPath = Some("/dv")) +: parts.tail, required),
+      "a batch with a deletion-vector file must read rows")
+    assert(!GraftMicroBatchStream.columnarEligible(parts,
+      new StructType().add("added_later", LongType)),
+      "a batch with a file storing no requested column must read rows")
+    assert(!GraftMicroBatchStream.columnarEligible(parts, StructType(
+      required.fields.map(f =>
+        if (f.name == "vec") f.copy(dataType = ArrayType(DoubleType)) else f))),
+      "a batch with a column the columnar reader cannot widen must read rows")
   }
 
   test("graft streaming source: skipChangeCommits survives a mid-stream " +
@@ -624,6 +631,38 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("graft streaming CDF: a change feed without deletion vectors reads " +
+      "columnar and delivers the copy-on-write pre/post images") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdf_col").toString
+    val root = s"$dir/tbl"
+    // one file holding ids 1 and 2, so the merge rewrites both
+    val t = graft.table.GraftTable.create(spark, root,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1))
+    t.append(Seq((3L, "c")).toDF("id", "s"))
+    t.mergeUpsert(Seq((1L, "z"), (7L, "g")).toDF("id", "s"),
+      Seq("id"), dvMode = "off")                      // copy-on-write rewrite
+    val q = spark.readStream.format("graft")
+      .option("readChangeFeed", "true").load(root)
+      .writeStream.format("parquet")
+      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/chk")
+      .outputMode("append").start()
+    q.processAllAvailable(); q.stop()
+    val plan = q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+    assert(plan.collect {
+      case c: org.apache.spark.sql.execution.ColumnarToRowExec => c
+    }.nonEmpty, s"DV-free change feed must read columnar:\n$plan")
+    val got = spark.read.parquet(s"$dir/out")
+      .select("id", "s", "_change_type").as[(Long, String, String)]
+      .collect().sorted.toSeq
+    val want = Seq(
+      (1L, "a", "insert"), (2L, "b", "insert"), (3L, "c", "insert"),
+      (1L, "a", "delete"), (2L, "b", "delete"),
+      (1L, "z", "insert"), (2L, "b", "insert"), (7L, "g", "insert")).sorted
+    assert(got == want, s"change feed diverged: $got")
+  }
+
   test("graft streaming CDF: a restore that shrinks or drops a deletion " +
       "vector emits RESURRECTED rows as inserts, never a spurious flood") {
     import org.apache.spark.sql.functions.col
@@ -711,6 +750,62 @@ class StreamingSpec extends SparkSpec {
     assert(got == want,
       s"widened stream must equal the batch read: $got vs $want")
     assert(got.map(_.getLong(0)).contains(8000000000L))
+  }
+
+  /** Drains `stream` into a parquet dir; a failed task surfaces here as a
+    * StreamingQueryException. */
+  private def drainToParquet(stream: org.apache.spark.sql.DataFrame,
+                             dir: String): Seq[org.apache.spark.sql.Row] = {
+    val q = stream.writeStream.format("parquet")
+      .option("path", s"$dir/out").option("checkpointLocation", s"$dir/chk")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    spark.read.parquet(s"$dir/out").collect().toSeq
+  }
+
+  test("graft streaming source: a stream of only a column added after the " +
+      "first file reads the pre-ALTER file's rows as nulls") {
+    val lake = java.nio.file.Files.createTempDirectory("graft_addcol").toString
+    spark.conf.set("spark.sql.catalog.graft_ac", "graft.table.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_ac.root", lake)
+    try {
+      spark.sql("CREATE NAMESPACE graft_ac.db")
+      spark.sql("CREATE TABLE graft_ac.db.g (id BIGINT)")
+      spark.sql("INSERT INTO graft_ac.db.g VALUES (1), (2)")
+      spark.sql("ALTER TABLE graft_ac.db.g ADD COLUMNS (n BIGINT)")
+      spark.sql("INSERT INTO graft_ac.db.g VALUES (3, 30)")
+      // the stream now requests only `n`, which the first file never stored
+      spark.sql("ALTER TABLE graft_ac.db.g DROP COLUMN id")
+      val root = s"$lake/db/g"
+      val got = drainToParquet(spark.readStream.format("graft").load(root),
+        lake)
+      val want = graft.table.GraftTable.forPath(spark, root).read().collect()
+      assert(want.length === 3 && want.count(_.isNullAt(0)) === 2)
+      assert(got.sortBy(_.toString) === want.toSeq.sortBy(_.toString))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.graft_ac")
+      spark.conf.unset("spark.sql.catalog.graft_ac.root")
+    }
+  }
+
+  test("graft streaming source: array<float> widened to array<double> " +
+      "streams old and new files exactly as the batch read") {
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft_widen_arr").toString
+    val root = s"$dir/tbl"
+    val t = graft.table.GraftTable.create(spark, root,
+      Seq((1L, Seq(1.5f, 0.1f)), (2L, Seq(-2.25f))).toDF("id", "vec"))
+    val c = t.commitAt(1)
+    // metadata-only element widening: the old file keeps its float vectors
+    t.commit(1, "widen", c.files, new StructType()
+      .add("id", LongType, nullable = false)
+      .add("vec", ArrayType(DoubleType, containsNull = false)))
+    t.append(Seq((3L, Seq(0.1, 4.5))).toDF("id", "vec"))
+    val got = drainToParquet(spark.readStream.format("graft").load(root), dir)
+      .sortBy(_.getLong(0))
+    val want = t.read().collect().toSeq.sortBy(_.getLong(0))
+    assert(got === want, s"widened array stream diverged: $got vs $want")
+    assert(got.head.getSeq[Double](1) === Seq(1.5, 0.1f.toDouble))
   }
 
   test("graft streaming source: INT96 timestamps and doubles round-trip exactly") {

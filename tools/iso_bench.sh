@@ -37,12 +37,23 @@ sbt -batch "runMain graft.tools.IsoBench $SF $KEYS" 2>&1 | tee "$LOG" \
 QUERIES=$(grep -oE '^\[info\] \{.*\}$' "$LOG" | tail -1 | sed 's/^\[info\] //')
 test -n "$QUERIES" || { echo "iso_bench: no JSON line captured"; exit 1; }
 if [ ! -d "$SF1_DIR" ]; then
-  sbt -batch "runMain graft.tools.ScaleGen $SF $SF1_DIR 10" > /dev/null 2>&1
+  GENLOG=$(mktemp /tmp/iso_bench_scalegen.XXXXXX.log)
+  if ! sbt -batch "runMain graft.tools.ScaleGen $SF $SF1_DIR 10" > "$GENLOG" 2>&1; then
+    # the directory did not exist before this run: drop the partial
+    # replica so the next run regenerates it instead of benchmarking it
+    rm -rf "$SF1_DIR"
+    echo "iso_bench: ScaleGen failed to build $SF1_DIR (log: $GENLOG)" >&2
+    exit 1
+  fi
 fi
 LOG1=$(mktemp /tmp/iso_bench_sf1.XXXXXX.log)
 sbt -batch "runMain graft.tools.IsoBench $SF1_DIR $SF1_KEYS" 2>&1 \
   | tee "$LOG1" | grep -E "min=" || true
 QUERIES1=$(grep -oE '^\[info\] \{.*\}$' "$LOG1" | tail -1 | sed 's/^\[info\] //')
+test -n "$QUERIES1" || {
+  echo "iso_bench: no JSON line captured from the sf1 IsoBench run (log: $LOG1)" >&2
+  exit 1
+}
 python3 - "$QUERIES" "$SF" "$QUERIES1" "$SF1_DIR" <<'EOF'
 import json, sys, datetime
 q = json.loads(sys.argv[1])
@@ -54,13 +65,11 @@ out = {
   "total": round(sum(q.values()), 3),
   "queries": q,
 }
-if len(sys.argv) > 3 and sys.argv[3]:
-    q1 = json.loads(sys.argv[3])
-    out["sf1_replica"] = {
-      "sf_dir": sys.argv[4],
-      "note": "deterministic 10x ScaleGen replica of sf0.1 (runMain graft.tools.ScaleGen <sf0.1> <dir> 10); top keys one decade up so scale-relevant effects are observable",
-      "queries": q1,
-    }
+out["sf1_replica"] = {
+  "sf_dir": sys.argv[4],
+  "note": "deterministic 10x ScaleGen replica of sf0.1 (runMain graft.tools.ScaleGen <sf0.1> <dir> 10); top keys one decade up so scale-relevant effects are observable",
+  "queries": json.loads(sys.argv[3]),
+}
 with open("BENCH_ISO.json", "w") as f:
     json.dump(out, f, indent=1, sort_keys=True)
 print("wrote BENCH_ISO.json: total", out["total"], "s over", len(q), "keys")
