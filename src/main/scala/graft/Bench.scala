@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 
 /** Driver-run benchmark: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints ONE compact JSON line. Round-1 lesson: the driver captures only the
@@ -21,29 +21,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same invariance/cluster-layout hook as Verify (driver never sets it):
-    // semicolon-separated k=v confs, malformed entries fail loudly
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").filter(_.nonEmpty).map { kv =>
-        require(kv.contains("="),
-          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not k=v")
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    extra.foreach { case (k, v) => System.err.println(s"[bench] conf $k=$v") }
-    val spark = extra.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        // analyzer rules can't register post-hoc — MERGE INTO needs this
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    // ERROR, not WARN: round-4's driver capture lost the metric line in a
-    // flood of storage-layer WARNs (BENCH_r04.json parsed=null). The metric
-    // line must be the one thing this process reliably emits.
-    spark.sparkContext.setLogLevel("ERROR")
-    Quiet.storageShutdownRace()
+    val spark = Harness.session()
     // Warm the session once so the first timed queries don't absorb one-time
     // JVM/session init (measured 1.5-3.5 s on whichever queries happen to run
     // first): executor threads, codegen compiler, hadoop FS, parquet footers
@@ -74,77 +52,32 @@ object Bench {
     // still compile fresh) — whichever queries the map iteration put first
     // then absorbed the residual one-time cost: exactly the round-3
     // driver-vs-local outlier pattern. ProfBench-measured one-time compile
-    // cost: 4.7 s on dedup_minhash, 0.5-1 s on typical plans. The warmup's
-    // own duration is reported as warmup_sec for transparency.
-    // Free blocks pinned by the query just run (localCheckpoint/cache):
-    // several queries materialize intermediates, and without this the
-    // blocks of every prior query (x3 for median-of-3 repeats) stay pinned
-    // for the rest of the bench — by the tail of the run the storage pool
-    // is carrying dozens of dead checkpoints and later queries pay the
-    // eviction/GC bill. Safe between queries: results are already counted.
-    var sinceGc = 0
-    def dropPinnedBlocks(): Unit = {
-      // Exempt the cross-query shared-input pins (rel.PinnedInputs): those
-      // play "materialized table" for whole families and must survive the
-      // per-query cleanup; everything else is a dead intermediate.
-      val keep = graft.rel.PinnedInputs.pinnedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep(r.id)).foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
-      // Drain the ContextCleaner periodically: broadcasts (bloom filters,
-      // hash relations, plane literals) are reclaimed via weak references,
-      // so their executor-side blocks linger until a GC cycle notices the
-      // driver object died. Across ~550 query executions the backlog
-      // starves an 8-16g heap and random queries absorb multi-second GC
-      // storms (measured: dedup_minhash 1.3 s → 13 s median-of-3 whenever
-      // its bench predecessor left enough residue). One explicit GC per
-      // ~24 queries costs ~2 s total and removes the failure mode.
-      sinceGc += 1
-      if (sinceGc >= 24) { sinceGc = 0; System.gc() }
-    }
+    // cost: 4.7 s on dedup_minhash, 0.5-1 s on typical plans (the probe was
+    // removed; `git show b3a4326:src/main/scala/graft/tools/ProfBench.scala`).
+    // The warmup's own duration is reported as warmup_sec for transparency.
     val tw = System.nanoTime()
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      dropPinnedBlocks()
+      Harness.release(spark)
     }
     val warmupSec = (System.nanoTime() - tw) / 1e9
     // Drain the warmup's residual cleaner backlog (up to 23 queries since
     // the last periodic GC) BEFORE timing starts — otherwise the first
     // timed queries (alphabetically agg_*) absorb it even under min-of-3
     // (measured: agg_approx_distinct 1.58 s in-bench vs 0.5 s isolated).
-    sinceGc = 0; System.gc()
-    // Noise control (round-2 lesson, tightened round 5): single-shot
-    // timings absorb GC pauses AND multi-second co-tenant bursts (measured:
-    // the same query 0.3 s in one run, 3 s median-of-3 in the next when a
-    // burst spanned its whole window — an A/B of two code trees in the same
-    // hour showed median per-query ratio 0.92 while 5-8 random queries
-    // spiked 4-15x). Timing noise on a fixed plan is strictly ADDITIVE, so
-    // the MINIMUM of repeated shots is the consistent estimator of true
-    // plan cost (timeit's rationale); the median still admits any burst
-    // longer than the repeat window. Any query whose first shot exceeds
-    // the threshold gets two more runs and reports the MIN; sub-threshold
-    // queries stay single-shot to bound total bench time.
-    val noiseThresholdSec = 0.3
+    Harness.gc()
     // A query that THROWS must not be silently reported as a (near-zero)
     // timing: record it in `failed` and surface the count on the headline
     // line, so a regression is visible in the bench artifact itself.
     val failed = scala.collection.mutable.SortedSet[String]()
     val results = SparkEntry.queries.map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
+      name -> Harness.minOf3(spark) {
         try { fn(spark, sfDir).count() }
         catch { case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
-        val t = (System.nanoTime() - t0) / 1e9
-        dropPinnedBlocks()
-        t
       }
-      val t1 = once()
-      val t = if (t1 > noiseThresholdSec) Seq(t1, once(), once()).min
-              else t1
-      name -> t
     }
     def r3(v: Double): String = f"$v%.3f"
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,30 +12,7 @@ object Verify {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // invariance-audit hook (driver never sets it): semicolon-separated
-    // k=v confs, e.g. SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.enabled=false"
-    // lets the audit diff dumps with AQE off / different knobs
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").filter(_.nonEmpty).map { kv =>
-        // Fail loudly on a malformed entry: silently dropping e.g.
-        // "spark.sql.adaptive.enabled:false" would make an invariance
-        // audit compare the baseline against itself and pass vacuously.
-        require(kv.contains("="),
-          s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not k=v")
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    extra.foreach { case (k, v) => System.err.println(s"[verify] conf $k=$v") }
-    val spark = extra.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        // analyzer rules can't register post-hoc — MERGE INTO needs this
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.storageShutdownRace()
+    val spark = Harness.session(logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -45,32 +22,15 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // free blocks the query pinned (Materialize.once persists lazily and
-      // queries never unpersist) — without this the storage pool carries
-      // every prior query's intermediates across the ~180-query run. The
-      // cross-query shared-input pins (rel.PinnedInputs) are exempt: they
-      // play "materialized table" for whole families.
-      val keep = graft.rel.PinnedInputs.pinnedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep(r.id)).foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      Harness.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, only)
     spark.stop()
   }
+
+  /** `<outDir>/oracle_sql.json`: the DuckDB oracle SQL of every declared
+    * key in `only` (all when None). */
+  def writeOracleSql(outDir: String, only: Option[Set[String]]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Harness.jsonObject(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) })): Unit
 }

@@ -85,8 +85,9 @@ case class VecDotExpr(left: Expression, right: Expression)
   * 64-dot projection generates a single Janino method past HotSpot's
   * huge-method bytecode threshold, so the whole signature pass ran as
   * INTERPRETED bytecode — measured ~10 µs per 64-float dot vs the ~0.1 µs
-  * the same loop costs JIT-compiled (tools/ProfLsh). This expression is
-  * one small nested loop (JIT-friendly), reads the vector once with full
+  * the same loop costs JIT-compiled (tools/ProfLsh, a removed probe: `git
+  * show b3a4326:src/main/scala/graft/tools/ProfLsh.scala`). This
+  * expression is one small nested loop (JIT-friendly), reads the vector once with full
   * locality, and emits every band value in a single pass.
   *
   * Numerics: per-dot left-to-right double summation, `> 0` strict — bit
@@ -294,6 +295,11 @@ case class VecL2SqExpr(left: Expression, right: Expression)
 /** Column-world + SQL-world entry points for the native vector ops. */
 object VecDotNative {
 
+  /** Squared L2 distance of two arrays (float or double elements, see
+    * [[VecL2SqExpr]]). Both arrays must have the same length: a row whose
+    * lengths differ fails the query with an `IllegalArgumentException`
+    * ("array lengths differ") rather than scoring a truncated distance.
+    * A null array gives null. */
   def vec_l2sq_native(a: Column, b: Column): Column =
     GraftSqlBridge.column(
       VecL2SqExpr(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))

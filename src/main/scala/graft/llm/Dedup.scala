@@ -461,7 +461,9 @@ object Dedup extends QueryModule {
     * 32-bit fingerprint's 4×8-bit blocks are right for the gate corpora
     * but quadratic-by-law at a 100× corpus (random block collisions are
     * n²·(d+1)/2^(w+1); measured as the executor-killing spill —
-    * SCALE.md round-10, `tools/ProfSimhashScale`). Block width cannot
+    * SCALE.md round-10, `tools/ProfSimhashScale`, a removed probe: `git
+    * show b3a4326:src/main/scala/graft/tools/ProfSimhashScale.scala`).
+    * Block width cannot
     * grow at fixed fingerprint width without breaking the pigeonhole
     * guarantee (Hamming ≤ d forces d+1 disjoint blocks), so the scale
     * knob is the FINGERPRINT: 120 bits in 4×30-bit blocks keeps the

@@ -34,8 +34,10 @@ object Similarity extends QueryModule {
 
   // Hot paths use the native codegen'd VecDotExpr (7x faster than the
   // higher-order formulation on the sf0.1 pair join, bit-identical results —
-  // see graft.tools.MicroBench); the HOF variants in VectorFunctions remain
-  // the portable reference implementation (and handle double arrays).
+  // measured by graft.tools.MicroBench, a removed probe: `git show
+  // b3a4326:src/main/scala/graft/tools/MicroBench.scala`); the HOF
+  // variants in VectorFunctions remain the portable reference
+  // implementation (and handle double arrays).
 
   /** The query vector: the embedding with the lowest vec_id (deterministic). */
   private def queryVec(spark: SparkSession, sfDir: String): DataFrame = {
@@ -398,8 +400,9 @@ object Similarity extends QueryModule {
 
   /** The SCALE geometry's hyperplanes: 8 bands × 24 rows (r ≈ log₂ n for
     * corpora in the 10⁵-10⁷ range — the ladder measured in SCALE.md
-    * round-10, `tools/ProfLshScale`). Same seed stream, so the first 64
-    * planes coincide with [[threshPlanes]]. */
+    * round-10, `tools/ProfLshScale`, a removed probe: `git show
+    * b3a4326:src/main/scala/graft/tools/ProfLshScale.scala`). Same seed
+    * stream, so the first 64 planes coincide with [[threshPlanes]]. */
   private lazy val threshPlanesWide: Seq[Seq[Float]] = {
     val rnd = new scala.util.Random(7)
     Seq.fill(WideBands * WideRows)(Seq.fill(64)(rnd.nextGaussian().toFloat))
@@ -413,7 +416,8 @@ object Similarity extends QueryModule {
   // generated one huge Janino method past HotSpot's JIT bytecode
   // threshold and ran INTERPRETED, ~10 µs per dot; one compact
   // nested-loop expression JIT-compiles and computes the identical
-  // doubles — measured 5x on the full query, tools/ProfLsh.)
+  // doubles — measured 5x on the full query, tools/ProfLsh, a removed
+  // probe: `git show b3a4326:src/main/scala/graft/tools/ProfLsh.scala`.)
 
   /** The UNBOUNDED threshold join: LSH candidates → exact verify — the
     * scale path that replaces [[simThresholdJoin]]'s label blocking (and
@@ -489,8 +493,9 @@ object Similarity extends QueryModule {
     // Materialize the banded signatures ONCE before the self-join: both
     // join inputs (and the SMJ sort on each) otherwise re-derive the
     // 64-hyperplane signature subtree per side — measured 5x the whole
-    // query at sf0.1 (2.0 s -> 0.42 s, tools/ProfLsh). The relation is
-    // (vec_id, band, bv) — b·n tiny rows; at cluster scale this is the
+    // query at sf0.1 (2.0 s -> 0.42 s, tools/ProfLsh, a removed probe:
+    // `git show b3a4326:src/main/scala/graft/tools/ProfLsh.scala`). The
+    // relation is (vec_id, band, bv) — b·n tiny rows; at cluster scale this is the
     // standard persist-signatures-then-join shape (lineage kept: a lost
     // block recomputes instead of killing the job).
     val banded = graft.rel.Materialize.pin(e

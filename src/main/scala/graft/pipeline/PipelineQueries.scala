@@ -159,7 +159,9 @@ object PipelineQueries extends QueryModule {
       // user-clustered file) — the shape where the auto DV decision
       // picks MERGE-ON-READ: the commit writes O(deleted rows) sidecar
       // vectors and swaps manifest entries, rewriting zero data files
-      // (ProfDml measures ~5500× fewer bytes than the COW control).
+      // (ProfDml measured ~5500× fewer bytes than the COW control; the
+      // probe was removed: `git show
+      // b3a4326:src/main/scala/graft/tools/ProfDml.scala`).
       val maxId = Option(Tables.events(spark, sfDir)
         .agg(max($"event_id")).first().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)

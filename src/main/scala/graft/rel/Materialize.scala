@@ -67,20 +67,16 @@ object Materialize {
   def pin(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
     val internal = df.queryExecution.toRdd.map(_.copy())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Re-root PRESERVING the origin plan's partitioning/ordering/stats
-    // (round-16; the checkpoint-style LogicalRDD): a pin that ends
-    // hash-partitioned on its consumers' join/group key no longer forces
-    // every consumer to re-exchange (and re-sort) it, and join strategy
-    // stays stats-driven instead of defaulting every pinned side to
-    // sort-merge — scale-adaptive in both directions (the same stats that
-    // broadcast a small fixture frame pick SMJ at 100 TB). The map-side
-    // row copy keeps rows in their partitions, so the declared
-    // partitioning/ordering remain true of the cached RDD.
+    // Re-root PRESERVING the origin plan's statistics (round-16; the
+    // checkpoint-style LogicalRDD): join strategy stays stats-driven
+    // instead of defaulting every pinned side to sort-merge —
+    // scale-adaptive in both directions (the same stats that broadcast a
+    // small fixture frame pick SMJ at 100 TB).
     (org.apache.spark.sql.GraftInternalAccess
       .fromInternalPreserving(internal, df), internal)
   }
 
-  /** [[pin]] that preserves partitioning/ordering but NOT statistics —
+  /** [[pin]] that does NOT preserve the origin statistics —
     * for pinned frames whose true size the estimator badly under-counts
     * (array payloads from collect_set/collect_list): preserved stats made
     * every consumer auto-broadcast the minhash signature table (6-14 joins

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (tokenize + md5 per token, JSON parsing, 120-way aggregate updates)
   * serializes on one core while the rest idle. Measured on the simhash
   * signature pass at sf0.1/local[32]: 2.40 s → 0.78 s
-  * (tools/ProfSpread).
+  * (tools/ProfSpread, a removed probe: `git show
+  * b3a4326:src/main/scala/graft/tools/ProfSpread.scala`).
   *
   * Scale honesty: the gate compares the scan's actual split count to the
   * session's parallelism and only fires when the scan is NARROW

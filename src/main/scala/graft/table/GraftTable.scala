@@ -42,7 +42,9 @@ final case class ColStat(kind: String, min: String, max: String,
   // bounds parse ONCE per entry, not once per pruning probe: a 300k-file
   // manifest sees every stat's min/max compared on every planned query,
   // and BigDecimal(String) per probe was the dominant pruning cost
-  // (ProfManifest). @transient: recomputed after deserialization.
+  // (ProfManifest, a removed probe: `git show
+  // b3a4326:src/main/scala/graft/tools/ProfManifest.scala`).
+  // @transient: recomputed after deserialization.
   @transient private lazy val minBig: BigDecimal =
     if (kind == "string" || kind == "null-only") null else BigDecimal(min)
   @transient private lazy val maxBig: BigDecimal =
@@ -450,8 +452,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * snapshot many times per query (rule batches iterate to fixed
     * point), so re-parsing a multi-MB manifest per resolution made the
     * DRIVER the bottleneck at a 100-TB file count (ProfManifest: ~1 s
-    * per parse at 300k entries, ×19 for one COUNT(*)). The cache entry
-    * is guarded by the manifest file's identity (size, mtime, inode):
+    * per parse at 300k entries, ×19 for one COUNT(*); a removed probe,
+    * `git show b3a4326:src/main/scala/graft/tools/ProfManifest.scala`).
+    * The cache entry is guarded by the manifest file's identity (size, mtime, inode):
     * a root that is deleted and re-created — same path, same version —
     * can never serve the old table's snapshot. */
   def commitAt(version: Long): TableCommit = {
@@ -2222,10 +2225,13 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * schema, standard parquet missing-column semantics), the batch is
     * aligned to the union column order before writing, and earlier
     * versions keep their own narrower schema (time travel reads each
-    * version with the schema it committed). Only ADDITIVE evolution is
-    * accepted — a batch column whose name exists with a different type is
-    * refused, because silently coercing types is how production lakehouse
-    * tables rot. */
+    * version with the schema it committed). Columns added to a table
+    * that already has files are committed nullable, as catalog ADD
+    * COLUMNS does: those files have no value for them, and a reader that
+    * trusts NOT NULL reads 0 where the batch read gives null. Only
+    * ADDITIVE evolution is accepted — a batch column whose name exists
+    * with a different type is refused, because silently coercing types is
+    * how production lakehouse tables rot. */
   def appendEvolve(df: DataFrame, operation: String = "append_evolve"): Long = {
     var attempt = 0
     var written: Option[(Seq[ManifestFile], StructType)] = None
@@ -2240,8 +2246,10 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
         baseSchema.find(_.name == f.name).exists(_.dataType != f.dataType))
       require(conflicts.isEmpty,
         s"appendEvolve refuses type changes on ${conflicts.map(_.name).mkString(", ")}")
-      val merged = StructType(baseSchema.fields ++
-        df.schema.fields.filterNot(f => baseSchema.fieldNames.contains(f.name)))
+      val added = df.schema.fields
+        .filterNot(f => baseSchema.fieldNames.contains(f.name))
+        .map(f => if (base.isEmpty) f else f.copy(nullable = true))
+      val merged = StructType(baseSchema.fields ++ added)
       // align the batch to the union: missing table columns become nulls
       val aligned = df.select(merged.fields.map { f =>
         if (df.columns.contains(f.name)) col(f.name)
@@ -2256,8 +2264,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
         else commitAt(parent).columnMapping
       val addedMapping =
         if (baseMapping.isEmpty) Map.empty[String, String]
-        else df.schema.fields.filterNot(f => baseSchema.fieldNames.contains(f.name))
-          .map(f => f.name -> s"${f.name}-${UUID.randomUUID().toString.take(8)}")
+        else added.map(f => f.name -> s"${f.name}-${UUID.randomUUID().toString.take(8)}")
           .toMap
       val newMapping = baseMapping ++ addedMapping
       // write once; a lost race rebases the same files (schema re-merged

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Tables
 
 /** Differential query fuzzer (round-10 verdict task 5): the 279 declared
@@ -343,15 +341,7 @@ object Fuzz {
     val n = if (args.length > 1) args(1).toInt else 200
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 3) args(3) else "/tmp/fuzz_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Quiet.storageShutdownRace()
+    val spark = Harness.session()
     // Register the fixture tables; events.ts goes through graft.Tables
     // (nanos → µs, matching DuckDB's own truncation) and is cast to the
     // session-UTC timestamp class so TIMESTAMP literals compare plainly.
@@ -374,19 +364,8 @@ object Fuzz {
         System.err.println(sql)
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = all.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), Harness.jsonObject(all))
     println(s"[fuzz] seed=$seed n=$n sparkFailures=$nFail out=$outDir")
     println(s"[fuzz] grade with: python3 tools/check_oracle.py $sfDir $outDir")
     spark.stop()

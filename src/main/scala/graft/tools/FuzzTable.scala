@@ -312,15 +312,7 @@ object FuzzTable {
     val seed = args.headOption.map(_.toLong).getOrElse(1300L)
     val nPrograms = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val nOps = args.drop(2).headOption.map(_.toInt).getOrElse(40)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Quiet.storageShutdownRace()
+    val spark = Harness.session()
 
     var commits = 0; var checks = 0
     (0 until nPrograms).foreach { i =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: ISOLATED min-of-N re-measurement of named queries — the
   * arbiter for "was that in-bench regression real or co-tenant noise?"
   * (BASELINE.md noise methodology: this VM shows minute-scale co-tenant
@@ -9,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * in-bench delta on an UNCHANGED plan needs an isolated min-of-3 before
   * it's accepted as real).
   *
-  * Matches Bench's steady-state methodology (untimed warm pass at the
+  * Matches Bench's steady-state methodology (same [[Harness.session]], so
+  * the same `local[SPARK_GRAFT_CPUS]` master; untimed warm pass at the
   * target SF, then timed shots, min reported) but runs ONLY the named
   * queries in a fresh JVM with nothing else on the session, so there is
   * no cross-query cache/GC interference.
@@ -23,35 +22,13 @@ object IsoBench {
     val keys = if (args.length > 1) args.drop(1).toSeq
                else sys.error("usage: IsoBench <sfDir> <queryKey>...")
     val shots = sys.env.getOrElse("ISO_SHOTS", "3").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def dropPinnedBlocks(): Unit = {
-      // shared-input pins survive (same exemption as Bench/Verify)
-      val keep = graft.rel.PinnedInputs.pinnedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep(r.id)).foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
-    }
-
+    val spark = Harness.session()
     val results = keys.map { k =>
       val fn = graft.SparkEntry.queries.getOrElse(k,
         sys.error(s"unknown query key: $k"))
       fn(spark, sfDir).count() // steady-state: plan compile outside timing
-      dropPinnedBlocks()
-      val times = (1 to shots).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        dropPinnedBlocks()
-        t
-      }
+      Harness.release(spark)
+      val times = Harness.shots(spark, shots)(fn(spark, sfDir).count())
       println(f"$k%-28s min=${times.min}%.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}")
       k -> times.min
     }

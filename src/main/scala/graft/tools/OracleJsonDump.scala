@@ -5,23 +5,7 @@ package graft.tools
   * assemble ONE full-surface json for tools/check_oracle.py without
   * re-dumping any query. Usage: runMain graft.tools.OracleJsonDump <outDir> [keys] */
 object OracleJsonDump {
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val only: Option[Set[String]] =
-      if (args.length > 1) Some(args(1).split(",").toSet) else None
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json): Unit
-  }
+  def main(args: Array[String]): Unit =
+    graft.Verify.writeOracleSql(args(0),
+      if (args.length > 1) Some(args(1).split(",").toSet) else None)
 }

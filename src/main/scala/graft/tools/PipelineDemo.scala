@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.WikiPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility / sample: drive the full daily wiki pipeline end-to-end
   * through the public API on synthesized raw data.
@@ -9,12 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("demo_wiki").toString

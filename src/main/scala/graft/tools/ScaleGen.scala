@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-probe fixture generator: replicates a driver sf directory k× with
@@ -58,13 +58,7 @@ object ScaleGen {
     val mode = if (args.length > 3) args(3) else ""
     val zipf = mode == "zipf"
     val uniq = mode == "uniqtext"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     // Dim key ranges (min, count) for FK-valid Pareto remaps, read once.

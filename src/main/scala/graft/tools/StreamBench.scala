@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{Tables, Quiet}
+import graft.Tables
 import graft.streaming.StreamOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -38,16 +37,9 @@ object StreamBench {
     val probes: Set[String] =
       if (args.length > 2) args(2).split(',').toSet
       else Set("running_totals", "session_window", "stream_stream_join", "table_sink")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Quiet.storageShutdownRace()
+    val spark = Harness.session()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val work = java.nio.file.Files.createTempDirectory("streambench").toString

@@ -18,12 +18,11 @@ object GraftInternalAccess {
     spark.internalCreateDataFrame(rdd, schema)
 
   /** Re-root on a cached InternalRow RDD PRESERVING the origin plan's
-    * output partitioning, ordering, statistics and constraints — the same
-    * `LogicalRDD.fromDataset` path `Dataset.checkpoint` uses (private[sql]
-    * in sql/core execution/ExistingRDD.scala). Unlike the bare
-    * [[fromInternal]] leaf (UnknownPartitioning, default stats), consumers
-    * of the pinned frame keep exchange reuse (a pin partitioned on its
-    * join key is not re-shuffled) and stats-driven join planning. */
+    * statistics and constraints — the same `LogicalRDD.fromDataset` path
+    * `Dataset.checkpoint` uses (private[sql] in sql/core
+    * execution/ExistingRDD.scala). Unlike the bare [[fromInternal]] leaf
+    * (default stats), consumers of the pinned frame keep stats-driven join
+    * planning. */
   def fromInternalPreserving(rdd: RDD[InternalRow], origin: DataFrame)
       : DataFrame = {
     val ds = origin.asInstanceOf[classic.Dataset[_]]
@@ -32,9 +31,9 @@ object GraftInternalAccess {
         rdd, ds, isStreaming = false))
   }
 
-  /** [[fromInternalPreserving]] minus the origin STATISTICS: partitioning
-    * and ordering carry over (exchange/sort reuse), but the leaf keeps the
-    * conservative default sizeInBytes so no consumer auto-broadcasts it.
+  /** [[fromInternalPreserving]] minus the origin STATISTICS: the leaf
+    * keeps the conservative default sizeInBytes so no consumer
+    * auto-broadcasts it.
     * For pinned frames whose true size the estimator badly under-counts
     * (collect_set array payloads), a stats-driven broadcast is wrong at
     * every scale. */

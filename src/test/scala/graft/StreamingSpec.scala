@@ -788,6 +788,21 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("graft streaming source: a NOT NULL column appendEvolve adds over " +
+      "older files streams as null, like the batch read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_evolve_nn").toString
+    val root = s"$dir/tbl"
+    val t = graft.table.GraftTable.create(spark, root, Seq(1L, 2L).toDF("id"))
+    // a Scala Long column is NOT NULL in the batch schema
+    t.appendEvolve(Seq((3L, 30L)).toDF("id", "n"))
+    // the stream requests only `n`, which the first file never stored
+    val got = drainToParquet(
+      spark.readStream.format("graft").load(root).select("n"), dir)
+    val want = t.read().select("n").collect()
+    assert(want.count(_.isNullAt(0)) === 2)
+    assert(got.sortBy(_.toString) === want.toSeq.sortBy(_.toString))
+  }
+
   test("graft streaming source: array<float> widened to array<double> " +
       "streams old and new files exactly as the batch read") {
     import org.apache.spark.sql.types._

@@ -136,6 +136,9 @@ class TableFormatSpec extends SparkSpec {
     assert(t.latestVersion == 2)
     val v2 = t.read(2)
     assert(v2.columns.toSeq == Seq("id", "name", "score"))
+    // the old file has no score: the batch's NOT NULL double commits nullable
+    assert(!Seq((3L, 0.5)).toDF("id", "score").schema("score").nullable)
+    assert(t.commitAt(2).schema("score").nullable)
     val rows = v2.select($"id", $"name", $"score")
       .as[(Long, Option[String], Option[Double])].collect().toSet
     assert(rows == Set((1L, Some("a"), None), (2L, Some("b"), None),

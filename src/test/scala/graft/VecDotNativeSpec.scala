@@ -38,6 +38,29 @@ class VecDotNativeSpec extends SparkSpec {
     assert(e.getMessage.contains("vec_dot_native"))
   }
 
+  test("vec_l2sq_native: unequal lengths throw on the interpreted and codegen paths") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val t = ArrayType(FloatType, containsNull = false)
+    val expr = graft.functions.VecL2SqExpr(
+      BoundReference(0, t, nullable = true), BoundReference(1, t, nullable = true))
+    def row(a: Float*)(b: Float*): InternalRow = InternalRow(
+      new GenericArrayData(a.toArray[Any]), new GenericArrayData(b.toArray[Any]))
+    val codegen = GenerateUnsafeProjection.generate(Seq(expr))
+    val bad = row(1f, 2f)(1f)
+    val interpreted = intercept[IllegalArgumentException](expr.eval(bad))
+    assert(interpreted.getMessage.contains("array lengths differ (2 vs 1)"))
+    val generated = intercept[IllegalArgumentException](codegen(bad))
+    assert(generated.getMessage.contains("array lengths differ (2 vs 1)"))
+    // equal lengths: both paths give the same distance
+    val ok = row(1f, 2f)(0f, 4f)
+    assert(expr.eval(ok) === 5.0)
+    assert(codegen(ok).getDouble(0) === 5.0)
+  }
+
   test("SQL registration exposes the function to spark.sql") {
     VecDotNative.register(spark)
     Tables.embeddings(spark, sf).createOrReplaceTempView("graft_emb")

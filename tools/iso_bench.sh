@@ -8,6 +8,8 @@
 set -e
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.1}"
+# IsoBench runs at Bench's master, local[$SPARK_GRAFT_CPUS] (Harness.session)
+CPUS="${SPARK_GRAFT_CPUS:-4}"
 KEYS="agg_daily_top_titles agg_daily_top_editors agg_multi scan_parquet \
 filter_partition_prune join_inner join_star join_range join_asof \
 win_rank_topn win_session topk_orderby_limit dedup_minhash dedup_text_hash \
@@ -54,12 +56,12 @@ test -n "$QUERIES1" || {
   echo "iso_bench: no JSON line captured from the sf1 IsoBench run (log: $LOG1)" >&2
   exit 1
 }
-python3 - "$QUERIES" "$SF" "$QUERIES1" "$SF1_DIR" <<'EOF'
+python3 - "$QUERIES" "$SF" "$QUERIES1" "$SF1_DIR" "$CPUS" <<'EOF'
 import json, sys, datetime
 q = json.loads(sys.argv[1])
 out = {
   "metric": "iso_min_of_3_sec",
-  "methodology": "fresh JVM per run, untimed warm pass, min of 3 timed shots, only the named query on the session",
+  "methodology": "fresh JVM per run, local[%s] with %s shuffle partitions (Bench's master), untimed warm pass, min of 3 timed shots, only the named query on the session" % (sys.argv[5], sys.argv[5]),
   "sf_dir": sys.argv[2],
   "generated_utc": datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds"),
   "total": round(sum(q.values()), 3),
