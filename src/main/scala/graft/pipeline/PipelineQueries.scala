@@ -140,7 +140,7 @@ object PipelineQueries extends QueryModule {
     * rides Spark's SupportsDelete into [[graft.table.GraftTable.deleteWhere]];
     * `UPDATE ... SET ... WHERE` lowers through [[graft.table.GraftMergeRule]]
     * to [[graft.table.GraftTable.updateWhere]] — both COPY-ON-WRITE
-    * (candidate files from the predicate's folded ranges; DataSourceSpec
+    * (candidate files from the filter each derives from its WHERE; DataSourceSpec
     * gates carried-path identity), both committing ordinary versions so
     * every pre-DML snapshot stays time-travelable. */
   private def sqlDmlTable(spark: SparkSession, sfDir: String): graft.table.GraftTable =
@@ -328,8 +328,8 @@ object PipelineQueries extends QueryModule {
       .agg(min($"doc_id")).first().get(0))
       .map(_.asInstanceOf[Long])
     val key = f"doc-${minId.getOrElse(0L)}%08d"
-    val pruned = t.pruneFiles(t.latestVersion, Seq.empty,
-      Seq(("sid", Some(key), Some(key))))
+    val pruned = t.pruneFiles(t.latestVersion,
+      graft.table.FileFilter(strRanges = Seq(("sid", Some(key), Some(key)))))
     val total = t.commitAt(t.latestVersion).files.size
     require(minId.isEmpty || pruned.size < total,
       s"bloom index must skip files for a point lookup ($pruned of $total survive)")

@@ -66,7 +66,7 @@ object WikiPipeline {
       .filter($"id".isNotNull)
       .withColumn("minor", coalesce($"minor", lit(false)))
     val curated = Curate.curateEpoch(parsed)
-    val t = new java.io.File(tableRoot, "_graft_log").exists() match {
+    val t = graft.table.GraftTable.isTable(tableRoot) match {
       case true => graft.table.GraftTable.forPath(spark, tableRoot)
       case false => return graft.table.GraftTable
         .createPartitioned(spark, tableRoot, curated, Seq("yyyy", "mm", "dd"),

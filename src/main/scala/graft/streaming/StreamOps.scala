@@ -102,7 +102,7 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val t =
-          if (new java.io.File(tableRoot, "_graft_log").exists())
+          if (graft.table.GraftTable.isTable(tableRoot))
             graft.table.GraftTable.forPath(spark, tableRoot)
           else
             graft.table.GraftTable.createEmpty(spark, tableRoot, batch.schema)

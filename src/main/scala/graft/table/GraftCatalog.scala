@@ -24,7 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Identifiers map to paths (`root/ns.../name`), a table exists iff its
-  * `_graft_log` does, and every SQL write lands through the same
+  * commit log does ([[GraftTable.isTable]]), and every SQL write lands through the same
   * transactional commit path as the programmatic API — `INSERT INTO` is
   * an append version, `INSERT OVERWRITE` a snapshot replace, both
   * atomic, both time-travelable. `VERSION AS OF` resolves through
@@ -61,7 +61,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     ns.foldLeft(new File(root))((d, p) => new File(d, p))
   private def dirFor(ident: Identifier): File =
     new File(dirFor(ident.namespace), ident.name)
-  private def isTable(d: File): Boolean = new File(d, "_graft_log").isDirectory
+  private def isTable(d: File): Boolean = GraftTable.isTable(d.getPath)
 
   // ---- tables --------------------------------------------------------------
 

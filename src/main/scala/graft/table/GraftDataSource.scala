@@ -24,9 +24,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The SQL-facing half of the table format: `versionAsOf` resolves the
   * snapshot from one manifest (Delta's `VERSION AS OF`), and scan
   * predicates arrive through [[SupportsPushDownFilters]] where they are
-  * folded into per-column ranges and applied to the manifests' per-file
-  * min/max ([[GraftTable.pruneFiles]]) BEFORE any data IO — the automatic
-  * form of the hand-passed ranges `readPruned` callers used to compute.
+  * folded into one [[FileFilter]] and applied to the manifests' per-file
+  * partition values, min/max and null counts ([[GraftTable.pruneFiles]])
+  * BEFORE any data IO.
   * Manifest skipping is an optimization, never a filter: every pushed
   * predicate is also returned as a residual, so Spark re-applies it
   * row-level and a file that survives pruning conservatively cannot leak
@@ -158,7 +158,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister {
     val opts = new CaseInsensitiveStringMap(properties)
     val path = pathOf(opts)
     val reqParts = partitionColsOf(partitioning, opts)
-    if (new java.io.File(path, "_graft_log").exists()) {
+    if (GraftTable.isTable(path)) {
       val (t, v) = resolve(opts)
       changeRange(t, opts).foreach { case (from, to) =>
         // CDF read: the "table" is the change frame between the versions
@@ -209,8 +209,8 @@ private[table] final class GraftSparkTable(
   /** SQL `DELETE FROM graft.db.t WHERE cond` — Spark's SupportsDelete
     * path: accept iff every conjunct rebuilds faithfully as a Column
     * (refusal surfaces Spark's loud unsupported-DELETE error), then run
-    * the COPY-ON-WRITE delete: the same predicate folded to ranges prunes
-    * candidate files off the manifest, only those rewrite. */
+    * [[GraftTable.deleteWhere]] on the rebuilt condition, which derives
+    * its own file filter from it. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     existing.isDefined && filters.forall(f => GraftFilterRanges.toColumn(f).isDefined)
 
@@ -219,9 +219,7 @@ private[table] final class GraftSparkTable(
       throw new IllegalArgumentException(s"no graft table log at $root"))
     val cond = filters.flatMap(GraftFilterRanges.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    t.deleteWhere(cond,
-      GraftFilterRanges.toRanges(filters.toSeq),
-      GraftFilterRanges.toStrRanges(filters.toSeq)): Unit
+    t.deleteWhere(cond): Unit
   }
   override def name(): String = existing match {
     case Some((_, v)) => s"graft.`$root` v$v"
@@ -338,8 +336,7 @@ private[table] final class GraftWriteBuilder(root: String,
           override def insert(df: org.apache.spark.sql.DataFrame,
                               overwrite: Boolean): Unit = {
             val spark = df.sparkSession
-            val exists = new java.io.File(root, "_graft_log").exists()
-            if (!exists) {
+            if (!GraftTable.isTable(root)) {
               if (partCols.nonEmpty)
                 GraftTable.createPartitioned(spark, root, df, partCols): Unit
               else
@@ -373,15 +370,12 @@ private[table] final class GraftScanBuilder(t: GraftTable, version: Long,
   private var required: StructType = tableSchema
   private var accepted: Array[Filter] = Array.empty
 
-  /** Keep the filters whose shape folds into min/max ranges; return ALL
+  /** Keep the filters that fold into the [[FileFilter]]; return ALL
     * filters as residuals — pruning can only SKIP files, so the row-level
     * predicate must still run (exactly how parquet footer pruning
     * composes with FilterExec). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    accepted = filters.filter(f =>
-      GraftFilterRanges.toRanges(Seq(f)).nonEmpty ||
-        GraftFilterRanges.toStrRanges(Seq(f)).nonEmpty ||
-        GraftFilterRanges.toNullPreds(Seq(f)).nonEmpty)
+    accepted = filters.filter(f => !GraftFilterRanges.fold(Seq(f)).isEmpty)
     filters
   }
   override def pushedFilters(): Array[Filter] = accepted
@@ -391,29 +385,25 @@ private[table] final class GraftScanBuilder(t: GraftTable, version: Long,
 
   override def build(): Scan =
     new GraftV1Scan(t, version, required,
-      GraftFilterRanges.toRanges(accepted.toSeq), startingVersion,
-      maxVersionsPerTrigger, GraftFilterRanges.toStrRanges(accepted.toSeq),
-      skipChangeCommits, readChangeFeed,
-      GraftFilterRanges.toNullPreds(accepted.toSeq))
+      GraftFilterRanges.fold(accepted.toSeq), startingVersion,
+      maxVersionsPerTrigger, skipChangeCommits, readChangeFeed)
 }
 
 /** Public (not `private[table]`) so plan-gating tests can collect the
   * planned scan from `optimizedPlan` and assert on [[prunedFiles]]. */
 final class GraftV1Scan(
     t: GraftTable, version: Long, required: StructType,
-    val ranges: Seq[(String, BigDecimal, BigDecimal)],
+    val filter: FileFilter,
     startingVersion: String = "0",
     maxVersionsPerTrigger: Option[Long] = None,
-    val strRanges: Seq[(String, Option[String], Option[String])] = Seq.empty,
     skipChangeCommits: Boolean = false,
-    readChangeFeed: Boolean = false,
-    val nullPreds: Seq[(String, Boolean)] = Seq.empty)
+    readChangeFeed: Boolean = false)
     extends V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   /** The manifest-pruned file subset this scan will read — public so
     * PlanSpec can gate "strict subset" on the DSv2 path directly. */
-  val prunedFiles: Seq[ManifestFile] = t.pruneFiles(version, ranges, strRanges, nullPreds)
+  val prunedFiles: Seq[ManifestFile] = t.pruneFiles(version, filter)
   private val tableSchema: StructType = t.commitAt(version).schema
   private val totalFiles: Int = t.commitAt(version).files.size
 
@@ -451,7 +441,7 @@ final class GraftV1Scan(
 
   override def description(): String =
     s"GraftScan ${t.root} v$version files=${prunedFiles.size}/$totalFiles " +
-      s"ranges=$ranges strRanges=$strRanges"
+      s"ranges=${filter.ranges} strRanges=${filter.strRanges}"
 
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T = {
@@ -486,25 +476,77 @@ private[table] final class GraftV1Relation(
     df.queryExecution.toRdd.asInstanceOf[RDD[Row]]
 }
 
-/** Source-filter → per-column range folding for manifest skipping. Only
-  * shapes whose satisfying set is bounded by a single interval per column
-  * fold; everything else simply doesn't prune (sound: pruning is an
-  * optimization). Strict bounds fold to their inclusive superset —
-  * min/max stats cannot distinguish open from closed endpoints anyway. */
+/** The one file-skipping predicate, over three channels: NUMERIC ranges
+  * `(column, lo, hi)` in the manifests' stat domain (timestamps as epoch
+  * micros, dates as epoch days), STRING ranges `(column, lower, upper)`
+  * in UTF-8 order (`None` = unbounded on that side), and NULL-ness tests
+  * `(column, wantNull)`. Columns are LOGICAL names. A file survives
+  * unless some entry provably excludes it ([[GraftTable.pruneFiles]]);
+  * the empty filter keeps every file. Built by [[GraftFilterRanges]]. */
+final case class FileFilter(
+    ranges: Seq[(String, BigDecimal, BigDecimal)] = Seq.empty,
+    strRanges: Seq[(String, Option[String], Option[String])] = Seq.empty,
+    nulls: Seq[(String, Boolean)] = Seq.empty) {
+  def isEmpty: Boolean = ranges.isEmpty && strRanges.isEmpty && nulls.isEmpty
+}
+
+/** Source filters → the [[FileFilter]], folded once. Only shapes whose
+  * satisfying set is bounded by a single interval per column fold;
+  * everything else simply doesn't prune (sound: pruning is an
+  * optimization). A strict bound on an integral literal steps past its
+  * endpoint (`id < 100` folds as `id ≤ 99`, so a file whose min is 100
+  * skips); on every other domain it folds to its inclusive superset. */
 private[table] object GraftFilterRanges {
+  import org.apache.spark.sql.catalyst.{expressions => ce}
+
+  def fold(filters: Seq[Filter]): FileFilter =
+    FileFilter(filters.flatMap(foldNum), filters.flatMap(foldStr),
+      filters.flatMap(foldNull))
+
+  /** The filter catalyst conditions imply: constants folded first (the
+    * analyzer leaves `id >= cast(200 as bigint)` for the optimizer, and
+    * an unfolded cast translates to nothing), conjuncts split so an
+    * untranslatable conjunct drops only itself, and each conjunct
+    * translated by Spark's own `translateFilter` — the translation every
+    * connector's pushdown uses. */
+  def of(conds: Seq[ce.Expression]): FileFilter =
+    fold(conds.flatMap(c => conjuncts(foldConstants(c)))
+      .flatMap(org.apache.spark.sql.GraftInternalAccess.translateFilter))
+
+  /** The filter of a DML condition: `cond` is analyzed against `schema`
+    * over an empty local relation (no data read), so its columns bind
+    * and its literals coerce exactly as the row-level evaluation will
+    * see them, then [[of]]. */
+  def of(spark: SparkSession, schema: StructType,
+         cond: org.apache.spark.sql.Column): FileFilter =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      .filter(cond).queryExecution.analyzed match {
+        case org.apache.spark.sql.catalyst.plans.logical.Filter(c, _) => of(Seq(c))
+        case _ => FileFilter()
+      }
+
+  private def conjuncts(e: ce.Expression): Seq[ce.Expression] = e match {
+    case ce.And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case x => Seq(x)
+  }
+
+  /** A subtree that fails to evaluate (an ANSI cast error behind a
+    * branch the rows never take) stays unfolded and just doesn't prune. */
+  private def foldConstants(e: ce.Expression): ce.Expression = e.transformUp {
+    case x if x.foldable && x.deterministic && !x.isInstanceOf[ce.Literal] =>
+      scala.util.Try(ce.Literal(x.eval(), x.dataType): ce.Expression).getOrElse(x)
+  }
 
   /** NULL-ness predicates, the third pruning channel: `IsNull(c)` can
     * skip files whose manifests record ZERO nulls in `c`; `IsNotNull(c)`
     * (which Spark pushes for nearly every referenced column) can skip
     * files that are ALL null in `c`. Both decisions come straight from
     * the per-file null counts the manifests already carry. */
-  def toNullPreds(filters: Seq[Filter]): Seq[(String, Boolean)] =
-    filters.flatMap {
-      case IsNull(c)    => Seq((c, true))
-      case IsNotNull(c) => Seq((c, false))
-      case _            => Seq.empty
-    }
-
+  private def foldNull(f: Filter): Seq[(String, Boolean)] = f match {
+    case IsNull(c)    => Seq((c, true))
+    case IsNotNull(c) => Seq((c, false))
+    case _            => Seq.empty
+  }
 
   private val NegInf = BigDecimal("-1e40")
   private val PosInf = BigDecimal("1e40")
@@ -512,9 +554,11 @@ private[table] object GraftFilterRanges {
   /** Numeric rendering of a literal in the MANIFEST's stat domain:
     * numbers as themselves, timestamps as epoch micros (the INT64
     * physical value footerStats records, unit-normalized at prune time by
-    * [[ColStat.overlaps]]), dates as epoch days. Non-finite floats
-    * (NaN/Infinity) have no BigDecimal rendering — they decline to fold
-    * (no prune) instead of failing the whole query at plan time. */
+    * [[ColStat.overlaps]]), dates as epoch days. Pre-1970 instants floor
+    * their millis to whole seconds before the sub-second nanos add back.
+    * Non-finite floats (NaN/Infinity) have no BigDecimal rendering — they
+    * decline to fold (no prune) instead of failing the whole query at
+    * plan time. */
   private def num(v: Any): Option[BigDecimal] = v match {
     case null => None
     case d: java.lang.Double if d.isNaN || d.isInfinite => None
@@ -523,7 +567,7 @@ private[table] object GraftFilterRanges {
     case n: java.lang.Number =>
       scala.util.Try(BigDecimal(n.toString)).toOption
     case ts: java.sql.Timestamp =>
-      Some(BigDecimal(ts.getTime / 1000L * 1000000L + ts.getNanos / 1000L))
+      Some(BigDecimal(Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L))
     case i: java.time.Instant =>
       Some(BigDecimal(i.getEpochSecond * 1000000L + i.getNano / 1000L))
     case ldt: java.time.LocalDateTime =>
@@ -533,30 +577,27 @@ private[table] object GraftFilterRanges {
     case _ => None
   }
 
-  def toRanges(filters: Seq[Filter]): Seq[(String, BigDecimal, BigDecimal)] =
-    filters.flatMap(fold)
+  /** The gap to the next value of an integral literal's domain; 0 where
+    * values are not integral (the bound stays inclusive). */
+  private def step(v: Any): BigDecimal = v match {
+    case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+         _: java.lang.Byte => 1
+    case _ => 0
+  }
 
-  private def fold(f: Filter): Seq[(String, BigDecimal, BigDecimal)] = f match {
+  private def foldNum(f: Filter): Seq[(String, BigDecimal, BigDecimal)] = f match {
     case EqualTo(c, v)            => num(v).map(b => (c, b, b)).toSeq
     case EqualNullSafe(c, v)      => num(v).map(b => (c, b, b)).toSeq
-    case GreaterThan(c, v)        => num(v).map(b => (c, b, PosInf)).toSeq
+    case GreaterThan(c, v)        => num(v).map(b => (c, b + step(v), PosInf)).toSeq
     case GreaterThanOrEqual(c, v) => num(v).map(b => (c, b, PosInf)).toSeq
-    case LessThan(c, v)           => num(v).map(b => (c, NegInf, b)).toSeq
+    case LessThan(c, v)           => num(v).map(b => (c, NegInf, b - step(v))).toSeq
     case LessThanOrEqual(c, v)    => num(v).map(b => (c, NegInf, b)).toSeq
     case In(c, vs) if vs.nonEmpty =>
       val bs = vs.toSeq.flatMap(num)
       if (bs.length == vs.length) Seq((c, bs.min, bs.max)) else Seq.empty
-    case And(l, r) => fold(l) ++ fold(r)
+    case And(l, r) => foldNum(l) ++ foldNum(r)
     case _ => Seq.empty
   }
-
-  /** STRING-range folding — the text sibling of [[toRanges]], pruning on
-    * the manifests' truncated string min/max (UTF-8 order). `None` bound
-    * = unbounded; same single-interval-per-column shapes as the numeric
-    * fold. StartsWith is a genuine range: `[prefix, prefix∞)` — its upper
-    * side is served by the truncated max's own increment property. */
-  def toStrRanges(filters: Seq[Filter]): Seq[(String, Option[String], Option[String])] =
-    filters.flatMap(foldStr)
 
   private def str(v: Any): Option[String] = v match {
     case s: String => Some(s)
@@ -590,6 +631,11 @@ private[table] object GraftFilterRanges {
     case _ => None
   }
 
+  /** STRING-range folding — the text sibling of [[foldNum]], pruning on
+    * the manifests' truncated string min/max (UTF-8 order). Same
+    * single-interval-per-column shapes as the numeric fold. StartsWith
+    * is a genuine range: `[prefix, prefix∞)` — its upper side is served
+    * by the truncated max's own increment property. */
   private def foldStr(f: Filter): Seq[(String, Option[String], Option[String])] = f match {
     case EqualTo(c, v)            => str(v).map(s => (c, Some(s), Some(s))).toSeq
     case EqualNullSafe(c, v)      => str(v).map(s => (c, Some(s), Some(s))).toSeq

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -121,12 +121,8 @@ final class GraftFileIndex(spark: SparkSession, t: GraftTable, version: Long)
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     // 1. data filters → manifest pruning (partition values, min/max
-    //    stats, null counts, bloom index) — same fold the DSv2 scan uses
-    val translated = dataFilters.flatMap(e => GraftFileIndex.toSourceFilter(e))
-    val files = t.pruneFiles(version,
-      GraftFilterRanges.toRanges(translated),
-      GraftFilterRanges.toStrRanges(translated),
-      GraftFilterRanges.toNullPreds(translated))
+    //    stats, null counts, bloom index) — the filter the DSv2 scan uses
+    val files = t.pruneFiles(version, GraftFilterRanges.of(dataFilters))
     if (partitionSchema.isEmpty)
       return Seq(PartitionDirectory(InternalRow.empty, files.map(statusOf).toArray))
     // 2. group by partition values; static partition predicates evaluate
@@ -173,65 +169,4 @@ final class GraftFileIndex(spark: SparkSession, t: GraftTable, version: Long)
 
   override def toString: String =
     s"GraftFileIndex(${t.root} v$version files=${commit.files.size})"
-}
-
-object GraftFileIndex {
-  import org.apache.spark.sql.catalyst.{expressions => ce}
-  import org.apache.spark.sql.{sources => sf}
-  import org.apache.spark.sql.types.Decimal
-
-  /** Catalyst literal → the value domain [[GraftFilterRanges]] folds:
-    * catalyst already stores timestamps as epoch MICROS and dates as
-    * epoch DAYS — exactly the manifests' stat domains — so numerics pass
-    * through raw; strings unwrap from UTF8String. */
-  private def lit2val(v: Any): Any = v match {
-    case u: UTF8String => u.toString
-    case d: Decimal => d.toJavaBigDecimal
-    case x => x
-  }
-
-  /** Minimal catalyst→source-filter fold for the pruning shapes
-    * [[GraftFilterRanges]] understands (the `protected[sql]`
-    * `DataSourceStrategy.translateFilter` is out of reach). Sound by the
-    * usual pruning contract: an untranslatable (half of a) predicate
-    * simply doesn't prune; for AND, either translatable conjunct alone
-    * keeps a superset of the files both would. Comparisons fold from
-    * both orientations (`col < lit` and `lit > col`). */
-  private[table] def toSourceFilter(e: ce.Expression): Option[sf.Filter] = e match {
-    case ce.EqualTo(a: ce.AttributeReference, ce.Literal(v, _)) =>
-      Some(sf.EqualTo(a.name, lit2val(v)))
-    case ce.EqualTo(ce.Literal(v, _), a: ce.AttributeReference) =>
-      Some(sf.EqualTo(a.name, lit2val(v)))
-    case ce.GreaterThan(a: ce.AttributeReference, ce.Literal(v, _)) =>
-      Some(sf.GreaterThan(a.name, lit2val(v)))
-    case ce.GreaterThan(ce.Literal(v, _), a: ce.AttributeReference) =>
-      Some(sf.LessThan(a.name, lit2val(v)))
-    case ce.GreaterThanOrEqual(a: ce.AttributeReference, ce.Literal(v, _)) =>
-      Some(sf.GreaterThanOrEqual(a.name, lit2val(v)))
-    case ce.GreaterThanOrEqual(ce.Literal(v, _), a: ce.AttributeReference) =>
-      Some(sf.LessThanOrEqual(a.name, lit2val(v)))
-    case ce.LessThan(a: ce.AttributeReference, ce.Literal(v, _)) =>
-      Some(sf.LessThan(a.name, lit2val(v)))
-    case ce.LessThan(ce.Literal(v, _), a: ce.AttributeReference) =>
-      Some(sf.GreaterThan(a.name, lit2val(v)))
-    case ce.LessThanOrEqual(a: ce.AttributeReference, ce.Literal(v, _)) =>
-      Some(sf.LessThanOrEqual(a.name, lit2val(v)))
-    case ce.LessThanOrEqual(ce.Literal(v, _), a: ce.AttributeReference) =>
-      Some(sf.GreaterThanOrEqual(a.name, lit2val(v)))
-    case ce.In(a: ce.AttributeReference, vs)
-        if vs.nonEmpty && vs.forall(_.isInstanceOf[ce.Literal]) =>
-      Some(sf.In(a.name,
-        vs.map { case ce.Literal(v, _) => lit2val(v) }.toArray))
-    case ce.InSet(a: ce.AttributeReference, set) if set.nonEmpty =>
-      Some(sf.In(a.name, set.map(lit2val).toArray))
-    case ce.IsNull(a: ce.AttributeReference) => Some(sf.IsNull(a.name))
-    case ce.IsNotNull(a: ce.AttributeReference) => Some(sf.IsNotNull(a.name))
-    case ce.StartsWith(a: ce.AttributeReference, ce.Literal(v: UTF8String, _)) =>
-      Some(sf.StringStartsWith(a.name, v.toString))
-    case ce.And(l, r) => (toSourceFilter(l), toSourceFilter(r)) match {
-      case (Some(a), Some(b)) => Some(sf.And(a, b))
-      case (a, b) => a.orElse(b)
-    }
-    case _ => None
-  }
 }

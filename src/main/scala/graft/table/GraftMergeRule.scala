@@ -55,11 +55,10 @@ final class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** SQL `UPDATE t SET c = e WHERE cond` → [[GraftTable.updateWhere]]:
     * assigned values and the condition may reference any target column;
-    * the WHERE clause additionally folds (via the connector-standard
-    * filter translation) to per-column ranges for candidate selection
-    * off the manifest; a scattered update then commits merge-on-read
-    * (vector swaps + post-image appends), a dense one copy-on-write —
-    * everything unmatched carried by reference either way. */
+    * `updateWhere` derives its candidate-file filter from the condition
+    * itself; a scattered update then commits merge-on-read (vector swaps
+    * + post-image appends), a dense one copy-on-write — everything
+    * unmatched carried by reference either way. */
   private def lowerUpdate(u: UpdateTable, rel: DataSourceV2Relation): LogicalPlan = {
     val tAttrs = AttributeSet(rel.output)
     val assigns = u.assignments.map {
@@ -73,19 +72,8 @@ final class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
       if (!c.references.subsetOf(tAttrs))
         fail(s"UPDATE condition references non-table columns: $c")
     }
-    // the analyzer hasn't constant-folded yet (that's the optimizer), so
-    // `id >= 200` still reads `id >= cast(200 as bigint)` — fold foldable
-    // subtrees to literals first or no WHERE clause would ever translate
-    val folded = u.condition.map(_.transformUp {
-      case e: Expression if e.foldable && e.deterministic =>
-        org.apache.spark.sql.catalyst.expressions.Literal.create(e.eval(), e.dataType)
-    })
-    val filters = folded.toSeq
-      .flatMap(c => org.apache.spark.sql.GraftInternalAccess.translateFilter(c).toSeq)
     val root = rel.table.asInstanceOf[GraftSparkTable].rootPath
-    GraftUpdateCommand(root, assigns, u.condition,
-      GraftFilterRanges.toRanges(filters),
-      GraftFilterRanges.toStrRanges(filters))
+    GraftUpdateCommand(root, assigns, u.condition)
   }
 
   private def graftRelation(target: LogicalPlan): Option[DataSourceV2Relation] =
@@ -193,16 +181,14 @@ final case class GraftMergeCommand(root: String, batch: LogicalPlan,
 
 /** Eagerly-executed command a lowered SQL UPDATE becomes: applies each
   * assignment as `CASE WHEN cond THEN new ELSE old` over ONLY the
-  * candidate files ([[GraftTable.updateWhere]] — COW), committing a new
+  * candidate files ([[GraftTable.updateWhere]]), committing a new
   * version. Catalyst expressions travel by NAME (attribute refs rebound
   * as unresolved attributes), so they re-resolve against the table's
   * fresh read frame. */
 final case class GraftUpdateCommand(
     root: String,
     assignments: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-    condition: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-    ranges: Seq[(String, BigDecimal, BigDecimal)],
-    strRanges: Seq[(String, Option[String], Option[String])])
+    condition: Option[org.apache.spark.sql.catalyst.expressions.Expression])
     extends LeafRunnableCommand {
 
   override def run(sparkSession: SparkSession): Seq[Row] = {
@@ -213,7 +199,7 @@ final case class GraftUpdateCommand(
       })
     GraftTable.forPath(sparkSession, root).updateWhere(
       assignments.map { case (n, e) => n -> toCol(e) },
-      condition.map(toCol), ranges, strRanges)
+      condition.map(toCol))
     Seq.empty
   }
 }

@@ -26,9 +26,9 @@ import graft.table.{GraftTable, MaterializedAgg}
   *  - `upsertKeepLatest` over a mix of existing and fresh ids with a
   *    strictly-monotone ordering column (shadow replaces-or-inserts);
   *  - `deleteWhere` / `updateWhere` on range and modulus predicates,
-  *    sometimes WITH matching manifest prune hints (COW file-skipping
-  *    soundness under composition) and sometimes without (full-scan
-  *    path);
+  *    each with a fuzzed `dvMode` (the file filter each derives from its
+  *    own condition prunes the range shapes and keeps every file for the
+  *    modulus ones);
   *  - `compact` / `zorderBy` (content-preserving rewrites);
   *  - `restoreTo` a random retained version (shadow rolls back to its
   *    recorded snapshot);
@@ -152,7 +152,7 @@ object FuzzTable {
           val bm = b.map(r => r._1 -> r).toMap
           shadow = shadow.filterNot(r => bm.contains(r._1)) ++ b
           "upsert"
-        } else if (op < 50) { // delete: range (with/without prune hints) or modulus
+        } else if (op < 50) { // delete: range or modulus
           // DV mode is fuzzed too: auto (threshold decides), off (always
           // copy-on-write), force (always a vector when under the driver
           // bound) — every interleaving of vector swaps with merges,
@@ -160,10 +160,7 @@ object FuzzTable {
           val dvMode = Seq("auto", "off", "force")(rng.nextInt(3))
           if (rng.nextBoolean() && nextId > 0) {
             val lo = rng.nextLong(nextId); val hi = math.min(nextId - 1, lo + rng.nextInt(200))
-            val hints =
-              if (rng.nextBoolean()) Seq(("id", BigDecimal(lo), BigDecimal(hi)))
-              else Seq.empty
-            t.deleteWhere($"id" >= lo && $"id" <= hi, ranges = hints, dvMode = dvMode)
+            t.deleteWhere($"id" >= lo && $"id" <= hi, dvMode = dvMode)
             shadow = shadow.filterNot(r => r._1 >= lo && r._1 <= hi)
             s"delete_range_$dvMode"
           } else {
@@ -178,11 +175,8 @@ object FuzzTable {
           val dvMode = Seq("auto", "off", "force")(rng.nextInt(3))
           val lo = if (nextId == 0) 0L else rng.nextLong(nextId)
           val hi = math.min(math.max(nextId, 1L) - 1, lo + rng.nextInt(300))
-          val hints =
-            if (rng.nextBoolean()) Seq(("id", BigDecimal(lo), BigDecimal(hi)))
-            else Seq.empty
           t.updateWhere(Seq("s" -> concat($"s", lit("+u"))),
-            Some($"id" >= lo && $"id" <= hi), ranges = hints, dvMode = dvMode)
+            Some($"id" >= lo && $"id" <= hi), dvMode = dvMode)
           shadow = shadow.map(r =>
             if (r._1 >= lo && r._1 <= hi) (r._1, r._2, r._3 + "+u") else r)
           s"update_$dvMode"

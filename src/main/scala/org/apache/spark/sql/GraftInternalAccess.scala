@@ -58,9 +58,9 @@ object GraftInternalAccess {
 
   /** Bridge to `DataSourceStrategy.translateFilter` — the canonical
     * catalyst-Expression → `sources.Filter` translation every connector's
-    * pushdown uses. The graft table's SQL UPDATE lowering reuses it so a
-    * WHERE clause prunes candidate files with exactly the semantics the
-    * scan path's pushed filters have. */
+    * pushdown uses. `graft.table.GraftFilterRanges` reuses it, so the
+    * native file index and DELETE/UPDATE conditions prune files with
+    * exactly the semantics the DSv2 scan's pushed filters have. */
   def translateFilter(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : Option[sources.Filter] =
     org.apache.spark.sql.execution.datasources.DataSourceStrategy

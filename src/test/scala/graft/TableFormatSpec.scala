@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.table.{ConcurrentCommitException, GraftTable}
+import graft.table.{ConcurrentCommitException, FileFilter, GraftTable}
 
 /** The versioned table format's transactional contract (round-10 verdict
   * task 1): snapshot isolation via immutable files + manifests, atomic
@@ -161,7 +161,7 @@ class TableFormatSpec extends SparkSpec {
     assert(c.files.size == 10)
     // stats landed in the manifest (and survive the JSON round trip)
     assert(c.files.forall(_.stats.contains("id")))
-    val pruned = t.readPruned(1, Seq(("id", BigDecimal(150), BigDecimal(250))))
+    val pruned = t.readPruned(1, FileFilter(Seq(("id", BigDecimal(150), BigDecimal(250)))))
     // skipping: a 10% range touches ~2 of 10 files, never all of them
     assert(pruned.inputFiles.length < 10 && pruned.inputFiles.nonEmpty)
     // no row loss: pruned + real predicate == full scan + real predicate
@@ -170,10 +170,27 @@ class TableFormatSpec extends SparkSpec {
     assert(pruned.filter($"id".between(150, 250))
       .as[Long].collect().sorted.toSeq == want)
     // a column with no stats never prunes (pessimistic default)
-    assert(t.readPruned(1, Seq(("no_such_col", BigDecimal(0), BigDecimal(1))))
+    assert(t.readPruned(1, FileFilter(Seq(("no_such_col", BigDecimal(0), BigDecimal(1)))))
       .inputFiles.length == 10)
     // a fully-disjoint range prunes everything and stays readable
-    assert(t.readPruned(1, Seq(("id", BigDecimal(5000), BigDecimal(6000)))).isEmpty)
+    assert(t.readPruned(1, FileFilter(Seq(("id", BigDecimal(5000), BigDecimal(6000))))).isEmpty)
+  }
+
+  test("deleteWhere derives its file filter from its own condition") {
+    import spark.implicits._
+    // ids 0–399 as 4 range-clustered files of 100
+    val t = GraftTable.create(spark, tmpRoot("dmlfilter"),
+      spark.range(0, 400, 1, 4).toDF("id").withColumn("v", $"id"))
+    val v1 = t.commitAt(1).files
+    assert(v1.size == 4 && v1.forall(_.rows == 100))
+    val low = v1.filter(f => BigDecimal(f.stats("id").max) < 100).map(_.path).toSet
+    assert(low.size == 1)
+    t.deleteWhere($"id" < 100, dvMode = "off")
+    val v2 = t.commitAt(2)
+    assert(v2.operation == "delete")
+    val replaced = v1.map(_.path).toSet -- v2.files.map(_.path).toSet
+    assert(replaced == low, s"only the id < 100 file may be replaced, got $replaced")
+    assert(t.read().count() == 300 && t.read().filter($"id" < 100).isEmpty)
   }
 
   test("zorderBy + readPruned: either clustering dimension prunes z-range files") {
@@ -183,8 +200,8 @@ class TableFormatSpec extends SparkSpec {
     val t = GraftTable.create(spark, tmpRoot("zskip"), df)
     t.zorderBy(col("x").cast("int"), col("y").cast("int"), nFiles = 16)
     val full = t.commitAt(2).files.size
-    val byX = t.readPruned(2, Seq(("x", BigDecimal(0), BigDecimal(7))))
-    val byY = t.readPruned(2, Seq(("y", BigDecimal(0), BigDecimal(7))))
+    val byX = t.readPruned(2, FileFilter(Seq(("x", BigDecimal(0), BigDecimal(7)))))
+    val byY = t.readPruned(2, FileFilter(Seq(("y", BigDecimal(0), BigDecimal(7)))))
     assert(byX.inputFiles.length < full, s"x-range read all $full files")
     assert(byY.inputFiles.length < full, s"y-range read all $full files")
     assert(byX.filter($"x" <= 7).count() == 64 * 8)
@@ -1191,8 +1208,7 @@ class TableFormatSpec extends SparkSpec {
     assert(t.read(1).count() == 1000)
 
     // second delete on overlapping files MERGES vectors (sorted union)
-    t.deleteWhere($"id" >= 5L && $"id" <= 9L,
-      ranges = Seq(("id", BigDecimal(5), BigDecimal(9))))
+    t.deleteWhere($"id" >= 5L && $"id" <= 9L)
     val v3 = t.commitAt(3)
     assert(v3.operation == "delete_dv")
     assert(t.read().count() == 991) // 5..9 is 5 rows, but 7 was already gone
@@ -1292,7 +1308,7 @@ class TableFormatSpec extends SparkSpec {
     assert(allPartitioned(), "a COW update must keep the Hive layout")
     // partition pruning still works end-to-end after the rewrites
     val g2 = t.pruneFiles(t.latestVersion,
-      Seq(("g", BigDecimal(2), BigDecimal(2))))
+      FileFilter(Seq(("g", BigDecimal(2), BigDecimal(2)))))
     assert(g2.nonEmpty && g2.forall(_.partition.get("g").contains("2")))
     assert(t.read().filter($"g" === 2).count() == 100)
     assert(t.read().count() == 400) // 400 - deleted 8 + inserted 500
@@ -1312,7 +1328,7 @@ class TableFormatSpec extends SparkSpec {
       spark.range(4000).toDF("id")
         .withColumn("s", concat(lit("k-"), $"id"))
         .repartition(8))
-    val eq = Seq(("id", BigDecimal(1234), BigDecimal(1234)))
+    val eq = FileFilter(Seq(("id", BigDecimal(1234), BigDecimal(1234))))
     assert(t.pruneFiles(1, eq).size == 8, "stats alone cannot discriminate")
     assert(t.indexBloom("id") == 8)
     assert(t.indexBloom("id") == 0, "re-index must be incremental (no-op)")
@@ -1325,8 +1341,8 @@ class TableFormatSpec extends SparkSpec {
     assert(t.read().filter($"id" === 999999L).isEmpty)
     // string index too
     assert(t.indexBloom("s") == 8)
-    val sPruned = t.pruneFiles(1, Seq.empty,
-      Seq(("s", Some("k-77"), Some("k-77"))))
+    val sPruned = t.pruneFiles(1,
+      FileFilter(strRanges = Seq(("s", Some("k-77"), Some("k-77")))))
     assert(sPruned.size < 8)
     // a DV delete keeps the filter a sound SUPERSET: the file is still
     // consulted, the row-level read returns nothing
